@@ -47,7 +47,7 @@ object Lifecycle {
 
   /** Recursive delete of a scratch dir/file. The ONE implementation
     * shared by checkpoint, fixture and index cleanup (Drain, StAmortize,
-    * ScaleSmoke, IndexStore) so null handling and any future hardening
+    * IndexStore) so null handling and any future hardening
     * live in one place. Fires [[onDelete]] hooks once per call, after
     * the tree is gone. */
   def deleteRecursively(f: java.io.File): Unit = {
@@ -72,17 +72,12 @@ object Lifecycle {
     * audit). Blocking costs <1 ms per block here and makes the release
     * a real barrier.
     *
-    * [[maybeGc]]: broadcast variables and shuffle files are reclaimed by
-    * Spark's ContextCleaner only when the DRIVER GCs the corresponding
-    * handle — and `spark.cleaner.periodicGC.interval` defaults to 30
-    * MINUTES, longer than an entire catalog pass, so in a single-JVM
-    * bench nothing is reclaimed mid-pass. An explicit GC here was the
-    * working theory for the in-catalog drag on heavy entries — and the
-    * A/B DISPROVED it (see gcMode below): the drag was codegen-cache
-    * thrash, and explicit GC actively hurts by unloading generated
-    * classes. Default off; SPARK_GRAFT_RELEASE_GC = seconds | "each" |
-    * "off" remains for embedders whose long-session workloads are
-    * genuinely broadcast/shuffle-accumulation-bound. */
+    * No explicit driver GC follows: an A/B at the 128-query catalog,
+    * sf0.1 (PLANS.md round 13) measured GC per release as a ~25% total
+    * regression (61.8s vs 47.2s) and a 20s-throttled GC as ~6% — the
+    * in-catalog drag was codegen-cache thrash (see
+    * Sessions.graftDefaults), and a full GC unloads freshly compiled
+    * generated classes between passes. */
   def release(spark: SparkSession): Unit = {
     var f = deferred.poll()
     while (f != null) {
@@ -93,40 +88,5 @@ object Lifecycle {
     spark.sparkContext.getPersistentRDDs.valuesIterator.foreach { r =>
       try r.unpersist(blocking = true) catch { case NonFatal(_) => () }
     }
-    maybeGc()
-  }
-
-  // Default OFF — measured A/B at the 128-query catalog, sf0.1, two
-  // windows with reversed orderings (PLANS.md round 13): explicit GC per
-  // release is a ~25% TOTAL regression (61.8s vs 47.2s on the shared
-  // set, order-independent) and a 20s-throttled GC a ~6% one. The
-  // hypothesis that ContextCleaner starvation caused the in-catalog
-  // churn was WRONG: the dominant accumulation was codegen-cache
-  // thrash (see Sessions.graftDefaults), and the explicit full GC
-  // actively hurts by unloading freshly JIT-compiled generated classes
-  // between passes. The machinery stays for embedders whose workloads
-  // differ (e.g. genuinely broadcast-heavy long sessions).
-  private val gcMode: String =
-    sys.env.getOrElse("SPARK_GRAFT_RELEASE_GC", "off")
-  @volatile private var lastGcNanos: Long = 0L
-
-  /** Throttled explicit driver GC so the ContextCleaner can reclaim
-    * broadcast blocks and shuffle files during a long single-JVM catalog
-    * pass (see [[release]]). Off / every-release / at-most-every-N-s. */
-  private def maybeGc(): Unit = gcMode match {
-    case "off"  => ()
-    case "each" => System.gc()
-    case secs =>
-      // an unrecognized value must NOT silently enable the measured-
-      // regression behavior: anything non-numeric degrades to off
-      secs.toLongOption match {
-        case Some(n) if n > 0 =>
-          val now = System.nanoTime()
-          if (now - lastGcNanos > n * 1000000000L) {
-            lastGcNanos = now
-            System.gc()
-          }
-        case _ => ()
-      }
   }
 }

@@ -50,8 +50,6 @@ object Sessions {
       // hundreds of distinct recurring plans, recompiling every
       // whole-stage unit on every recurrence. 4096 entries holds the
       // full 128-query catalog's units (~1-2k) so recurring runs reuse
-      // compiled classes (A/B in PLANS.md round 13). Env-overridable
-      // for measurement.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      // compiled classes (A/B in PLANS.md round 13).
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 }

@@ -438,7 +438,7 @@ object Advanced {
       // the first exchange is the term window. Replaces the r5
       // materialize-tf (localCheckpoint) + broadcast-df plan that ran
       // 8.3x DuckDB on identical SQL (1.26s vs 0.15s at sf0.1).
-      // Measured (Tune, sf0.1 min-of-2): r5 plan 1.02-1.10s; window
+      // Measured (sf0.1 min-of-2): r5 plan 1.02-1.10s; window
       // plan with repartition 0.73-0.77s; this form 0.46s.
       val tf = Tables.documents(s, d)
         .select(col("doc_id"),
@@ -1649,7 +1649,7 @@ object Advanced {
     *
     * Scale: pure composition — every member keeps its own banded /
     * pre-aggregated shape, and Catalyst plans the whole ring as ONE
-    * query (plan audited via PlanDump, r13): the member orderBys are
+    * query (plan audited via tools.Plans, r13): the member orderBys are
     * eliminated below the joins (EliminateSorts — no ordering-only Sort
     * survives except the root), and the membership joins all hash on
     * doc_id (each member side pays its own derivation exchange — they
@@ -1976,8 +1976,8 @@ object Advanced {
     * Scale: the gate's cost is the ring's cost — one corpus-shaped
     * build (night 0), then slice-proportional band probes, a pair-set-
     * proportional fold/retract, and metadata-cheap publications; the
-    * per-night cost curve at 125k docs is ScaleSmoke `soak`
-    * (PLANS.md r17). */
+    * per-night cost curve at 125k docs is the `soak`
+    * scale run (PLANS.md r17). */
   val c08 = QueryDef(
     "c08_ring_soak",
     (s, d) => {

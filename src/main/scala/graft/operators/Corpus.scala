@@ -67,7 +67,7 @@ object Corpus {
     * (62.5k docs as chained 20-doc cliques, 1.8M pairs, diameter
     * ~3.1k) the shortcut converges in 12 rounds / 23.5s while plain
     * propagation was still running at its 40-round abort cap —
-    * ScaleSmoke ccskew, PLANS.md r17 (the r16 VERDICT's skew
+    * the ccskew scale run, PLANS.md r17 (the r16 VERDICT's skew
     * bracket). The shortcut join is
     * exact, not approximate: label values are vertex ids of the same
     * component (propagation moves them only along edges, shortcutting
@@ -84,40 +84,13 @@ object Corpus {
     * independent of round count. The FINAL labels checkpoint backs the
     * returned frame and is released by Lifecycle.release sweep. */
   private[graft] def connectedComponents(und: DataFrame): DataFrame = {
-    // measurement-only knobs (ScaleSmoke ccskew A/B): `off` reverts to
-    // plain hash-min propagation — the counterfactual the shortcut is
-    // measured against; maxRounds (0 = unlimited) aborts a run that
-    // would otherwise iterate ∝ diameter, so the plain arm can be
-    // timed on the chain adversary without running to completion.
-    // Production never sets either.
     val sess = und.sparkSession
-    val shortcut = sess.conf.get("spark.graft.cc.shortcut", "on") != "off"
-    // measurement-only knob: a malformed value must degrade to the
-    // default (unlimited), never throw from inside every CC consumer
-    // (r17 ADVICE — matches the listing-degradation convention).
-    val maxRounds = scala.util.Try(
-      sess.conf.get("spark.graft.cc.maxRounds", "0").toInt).getOrElse(0)
-    // Rounds executed per materialize-and-probe cycle. >1 fuses that
-    // many propagate+shortcut rounds into ONE checkpoint-and-probe
-    // barrier; monotonicity keeps the probe exact (sum unchanged across
-    // a fused group ⇔ no round in it changed anything ⇔ fixpoint), at
-    // the cost of up to rps-1 idempotent extra rounds past convergence.
-    // Default 1 — a MEASURED negative result from the r21 optimization
-    // loop (guide §1.2's warning made concrete): fusing two rounds
-    // halves the barriers but DOUBLES the per-sync join/agg work, and
-    // once the published-index file-count fix removed the scan floor,
-    // the extra work dominated on every shallow-diameter consumer
-    // (rps=2 vs 1, quiet-window A/B: c03 task time 19.3 s vs 7.6 s,
-    // t23 fn 1.84 s vs 1.10 s, t11 jobs 33 vs 23; mm11/mm12 flat —
-    // full table in OPTIMIZATION_r21.md). Barrier floors are constant
-    // while per-round work scales with data, so 1 is also the right
-    // production default; the knob stays for deep-diameter graphs
-    // (ccskew's 3.1k-diameter chain: 12 rounds) where the barrier
-    // count, not the join work, is the wall. Malformed values degrade
-    // to the default.
-    val roundsPerSync = math.max(1, scala.util.Try(
-      sess.conf.get("spark.graft.cc.roundsPerSync",
-        sys.env.getOrElse("SPARK_GRAFT_CC_RPS", "1")).toInt).getOrElse(1))
+    // One propagate+shortcut round per materialize-and-probe cycle.
+    // Fusing two rounds per sync was a MEASURED negative result (r21):
+    // it halves the barriers but DOUBLES the per-sync join/agg work,
+    // and the extra work dominated on every shallow-diameter consumer
+    // (c03 task time 19.3 s vs 7.6 s, t23 fn 1.84 s vs 1.10 s, t11 jobs
+    // 33 vs 23 — full table in OPTIMIZATION_r21.md).
     // und: (src, dst), already symmetrized. Materialize once — it feeds
     // every round's join AND the initial vertex set. This first
     // checkpoint stays on the CALLER's session (AQE on): the edge KERNEL
@@ -246,9 +219,7 @@ object Corpus {
     }
     var prevSum = labelSum(labels)
     var converged = false
-    var rounds = 0
-    // ONE propagate + (optional) shortcut round as a lazy plan — the
-    // loop below fuses `roundsPerSync` of these per materialization.
+    // ONE propagate + shortcut round as a lazy plan
     def round(lbl0: DataFrame): DataFrame = {
       // explicit non-null (true by construction) for the same
       // ReuseExchange reason as the edges filter above
@@ -263,25 +234,15 @@ object Corpus {
       // agg subplan appears on both sides but its inner exchange is
       // deduped by ReuseExchange — the round pays the two join
       // exchanges, and buys rounds ∝ log diameter.
-      if (!shortcut) agg
-      else {
-        val lookup0 = agg.select(col("v").as("lv"), col("label").as("label2"))
-        val lookup = if (staticLoop) lookup0.hint("SHUFFLE_HASH") else lookup0
-        agg.join(lookup, col("label") === col("lv"))
-          .select(col("v"), col("label2").as("label"))
-      }
+      val lookup0 = agg.select(col("v").as("lv"), col("label").as("label2"))
+      val lookup = if (staticLoop) lookup0.hint("SHUFFLE_HASH") else lookup0
+      agg.join(lookup, col("label") === col("lv"))
+        .select(col("v"), col("label2").as("label"))
     }
     while (!converged) {
-      rounds += roundsPerSync
-      if (maxRounds > 0 && rounds > maxRounds)
-        throw new IllegalStateException(
-          s"connectedComponents aborted: exceeded maxRounds=$maxRounds " +
-            "(spark.graft.cc.maxRounds is a measurement knob)")
-      val stepped = (1 until roundsPerSync).foldLeft(round(labels))(
-        (lbl, _) => round(lbl))
       // cut lineage (iterative joins stack plans); lazy — the probe
       // below is the materializing action, one job for round + probe
-      val (next, nextBlocks) = pinState(stepped)
+      val (next, nextBlocks) = pinState(round(labels))
       val s = labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -293,20 +254,12 @@ object Corpus {
     }
     edgeBlocks.foreach(_.unpersist(blocking = false))
     loopEdgeBlocks.foreach(_.unpersist(blocking = false))
-    lastRounds = rounds
     // hand the result back on the CALLER's session: consumers compose
     // further plans (and join corpus-scale frames) under the caller's
     // conf, not the loop child's. The labels blocks are materialized
     // (the final probe ran), so the bridge shares them without copying.
     if (staticLoop) LoopExec.bridge(sess, labels) else labels
   }
-
-  /** Rounds the last [[connectedComponents]] run took to converge —
-    * diagnostic only (read by tools/PLANS.md experiments deciding
-    * whether the alternating large-star/small-star variant is worth
-    * its extra per-round shuffle; it halves ROUNDS, so it only pays
-    * when measured diameter is deep). Never consulted by the engine. */
-  @volatile private[graft] var lastRounds: Int = 0
 
   /** Whether the last [[connectedComponents]] run took the static-loop
     * path (LoopExec byte gate) — diagnostic only, read by LoopExecSpec
@@ -325,8 +278,8 @@ object Corpus {
       // Edges from the PERSISTED MinHash+LSH pair index (t07's product),
       // not the exact inverted index (t06): the pair sets are identical
       // (LSH candidates are exactly verified; equality with t06 is
-      // pinned in OperatorsSpec and re-proven at 5k/20k/60k docs in
-      // ScaleSmoke), and reading the corpus-fingerprinted index means
+      // pinned in OperatorsSpec and re-proven at 5k/20k/60k docs,
+      // PLANS.md), and reading the corpus-fingerprinted index means
       // the LSH pipeline runs ONCE per corpus across t07/t11/t19 —
       // exactly the producer/consumer split a production CC stage has.
       // The oracle still recomputes edges exactly.
@@ -428,7 +381,7 @@ object Corpus {
     * 100 TB — runs only over the delta's cluster neighborhood (∝ the
     * daily slice and its duplicates, not the corpus); everything else
     * is one label-table anti-join splice. Measured honestly at 125k
-    * docs (ScaleSmoke ccdelta, re-run r17 with the pointer-jump CC and
+    * docs (the ccdelta scale run, re-run r17 with the pointer-jump CC and
     * the neighborhood-priced delta): 1.6× over re-pair+full-CC on the
     * DENSE replica corpus (1.3M pairs; was 1.2× in r16) and a LOSS
     * (0.7×, was 0.5×) on the sparse one, where full re-pairing from

@@ -19,11 +19,11 @@ import org.apache.spark.sql.DataFrame
   *
   * [[spread]] sizes the fan-out from the INPUT'S MEASURED BYTES instead
   * (planner stats — file bytes for the parquet scans these sites wrap):
-  * one partition per `spark.graft.kernel.bytesPerTask` (default 200 KB
-  * of scan input per task, COMPUTE-priced like [[LoopExec.partitionsFor]]'s
+  * one partition per [[DefaultBytesPerTask]] (200 KB of scan input per
+  * task, COMPUTE-priced like [[LoopExec.partitionsFor]]'s
   * divisor: these kernels expand input text into shingles/tokens at
   * 10-50x, so 200 KB in is a few MB of kernel output and tens of ms of
-  * work per task. Tune width A/B over 12 kernel entries at sf0.1, r22:
+  * work per task. Width A/B over 12 kernel entries at sf0.1, r22:
   * legacy core-count width 11.21s, 16KB 10.22s, 64KB 8.05s, 150KB
   * 7.40s, 300KB 8.15s, 1MB 10.56s — a flat valley at 128-300KB with
   * steep walls at both extremes; a refining pass placed 200KB at the
@@ -39,13 +39,8 @@ import org.apache.spark.sql.DataFrame
   * no additional bytes. */
 private[graft] object Fanout {
 
-  /** Default scan-bytes-per-kernel-task (see object doc). */
+  /** Scan bytes per kernel task (see object doc). */
   private val DefaultBytesPerTask = 200L * 1024
-
-  private def bytesPerTask(s: org.apache.spark.sql.SparkSession): Long =
-    scala.util.Try(s.conf.get(
-      "spark.graft.kernel.bytesPerTask", DefaultBytesPerTask.toString).toLong)
-      .getOrElse(DefaultBytesPerTask)
 
   /** The width [[spread]] would use for `df` (exposed for specs). */
   def widthFor(df: DataFrame): Int = {
@@ -61,8 +56,7 @@ private[graft] object Fanout {
   def widthForBytes(s: org.apache.spark.sql.SparkSession, bytes: Long): Int = {
     val cap = math.max(1, s.sparkContext.defaultParallelism)
     if (bytes < 0) return cap // unknown — the old width, never a serialized kernel
-    val perTask = math.max(1L, bytesPerTask(s))
-    val want = ((bytes + perTask - 1) / perTask) max 1L
+    val want = ((bytes + DefaultBytesPerTask - 1) / DefaultBytesPerTask) max 1L
     math.min(cap.toLong, want).toInt
   }
 

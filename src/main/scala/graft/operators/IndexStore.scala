@@ -26,11 +26,7 @@ package graft.operators
   * SourcesStreaming.RewriteLayoutV, BandIndex) or a warm /tmp serves
   * the old code's output.
   */
-// private[graft] (not [operators]): graft.tools measurement mains read
-// broadcastCapBytes — the ONE cap parser — rather than re-parsing the
-// conf (the r18 review found exactly that drifted duplicate in
-// ScaleSmoke, throwing on the standard "-1" disable form)
-private[graft] object IndexStore {
+private[operators] object IndexStore {
 
   /** Broadcast `df` only if its MEASURED in-memory size estimate fits
     * the session's `autoBroadcastJoinThreshold`; otherwise return
@@ -38,7 +34,7 @@ private[graft] object IndexStore {
     * estimates from COMPRESSED file size, which under-states the
     * broadcast hash relation (string-heavy sets decompress 5-10x, plus
     * row + map overhead) — measured failure "Not enough memory to build
-    * and broadcast" at 125k docs under a starved heap (SpillSmoke r13)
+    * and broadcast" at 125k docs under a starved heap (r13, PLANS.md)
     * on a set whose parquet stats looked broadcastable. The estimate
     * here is payload bytes + 32 B/row UnsafeRow overhead, x2 for the
     * hash relation layout. Costs one tiny aggregate over `df` — callers
@@ -71,7 +67,7 @@ private[graft] object IndexStore {
     * ONE parser for every tier gate: a drifted duplicate would let the
     * broadcast and SHUFFLE_HASH tiers of one join disagree about the
     * cap (r16 review). */
-  def broadcastCapBytes(s: org.apache.spark.sql.SparkSession): Long = {
+  private def broadcastCapBytes(s: org.apache.spark.sql.SparkSession): Long = {
     val raw = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     scala.util.Try(raw.trim.toLong).getOrElse(
       org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
@@ -88,18 +84,18 @@ private[graft] object IndexStore {
   }
 
   /** The THREE-TIER join-shape pin for a frame whose in-memory size the
-    * caller MEASURED (never planner stats — the SpillSmoke r13 class:
+    * caller MEASURED (never planner stats — the r13 starved-heap class:
     * compressed-file stats under-state string-heavy hash relations
     * 5-10×, and stacked selectivity estimates broadcast corpus-sized
-    * frames). Returns the pinned frame plus its tier label:
+    * frames). Returns the pinned frame:
     *
     *  - `est < 0` (caller cannot bound the frame): sort-merge, the only
-    *    unconditionally spill-safe shape — "merge(unpriced)";
+    *    unconditionally spill-safe shape;
     *  - `est ≤` the session broadcast cap: explicit broadcast;
     *  - past the cap, SHUFFLE_HASH only while the per-partition build
     *    PROVABLY fits (SHJ builds cannot spill — a build that outgrows
     *    its task's execution-memory share is a hard `Can't acquire ...
-    *    hash relation` failure, measured in RingSpill r16 at a 2 GB
+    *    hash relation` failure, measured in r16 at a 2 GB
     *    heap): double-gated with Spark's own SHJ-eligibility calculus
     *    (cap × partitions) AND the per-task input (×4 hash-map
     *    overhead, AQE-coalescing advisory floor included — a coalesced
@@ -113,11 +109,11 @@ private[graft] object IndexStore {
     * the r18 review closed, one level up. */
   def tieredHint(s: org.apache.spark.sql.SparkSession,
       df: org.apache.spark.sql.DataFrame, estBytes: Long)
-      : (org.apache.spark.sql.DataFrame, String) = {
+      : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    if (estBytes < 0) return (df.hint("MERGE"), "merge(unpriced)")
+    if (estBytes < 0) return df.hint("MERGE")
     val cap = broadcastCapBytes(s)
-    if (cap > 0 && estBytes <= cap) return (broadcast(df), "broadcast")
+    if (cap > 0 && estBytes <= cap) return broadcast(df)
     val parts = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
     // executor memory × fraction / slots ≈ one task's execution share
     // (local mode: the driver JVM heap; cluster mode: the executor conf
@@ -154,8 +150,8 @@ private[graft] object IndexStore {
       else estBytes / math.max(parts, 1)
     val perPartBuild = perTaskInput * buildOverhead
     if (cap > 0 && estBytes <= cap * parts && perPartBuild <= taskShare / 2)
-      (df.hint("SHUFFLE_HASH"), "shuffle_hash")
-    else (df.hint("MERGE"), "merge")
+      df.hint("SHUFFLE_HASH")
+    else df.hint("MERGE")
   }
 
   /** Fingerprint of a corpus table: name, length and mtime of every part
@@ -299,7 +295,7 @@ private[graft] object IndexStore {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
   // an in-JVM delete of a published dir (RetractionSpec's wipeAll
-  // re-publish, ScaleSmoke's mediamega delete+rebuild) must drop the
+  // re-publish, a delete+rebuild of a media index) must drop the
   // pinned schema for it and everything under it, or a rebuilt dir with
   // a changed layout would silently serve the stale schema (r20 ADVICE)
   graft.Lifecycle.onDelete { p =>
@@ -308,26 +304,17 @@ private[graft] object IndexStore {
 
   /** Read a PUBLISHED (publish-once, marker-gated, immutable) index dir
     * with its schema pinned from a per-JVM cache — skips the footer-read
-    * schema inference every plan construction over the dir pays
-    * (S13Profile r19 attributed 0.27–0.38 s of each warm probe plan to
-    * construction + footer reads; the r19 slate-#5 experiment, measured
-    * in PLANS r20). Sound ONLY for publish-once dirs: content under a
-    * published name never changes (the ensure() rename contract), and a
-    * regenerated corpus or bumped layout changes the DIR NAME, never the
-    * content under an existing one. The first read of a dir infers once
-    * to seed the cache; `spark.graft.schemaPin=off` reverts to bare
-    * reads for the A/B. */
+    * schema inference every plan construction over the dir pays (r19
+    * attributed 0.27–0.38 s of each warm probe plan to construction +
+    * footer reads; measured in PLANS r20). Sound ONLY for publish-once
+    * dirs: content under a published name never changes (the ensure()
+    * rename contract), and a regenerated corpus or bumped layout changes
+    * the DIR NAME, never the content under an existing one. The first
+    * read of a dir infers once to seed the cache. */
   def readPublished(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    // A/B switch: conf, with an env fallback that survives sbt's forked
-    // runs (a -D to sbt never reaches the forked main's JVM)
-    val mode = s.conf.get("spark.graft.schemaPin",
-      sys.env.getOrElse("SPARK_GRAFT_SCHEMA_PIN", "on"))
-    if (mode == "off") s.read.parquet(dir)
-    else {
-      val schema = schemaCache.computeIfAbsent(dir, d => s.read.parquet(d).schema)
-      s.read.schema(schema).parquet(dir)
-    }
+    val schema = schemaCache.computeIfAbsent(dir, d => s.read.parquet(d).schema)
+    s.read.schema(schema).parquet(dir)
   }
 
   /** Ensure the index at `dirPath` is published (its `marker` file

@@ -97,7 +97,7 @@ private[graft] object LoopExec {
     * round is join/agg work proportional to state, and an 8 MB slice of
     * (long, long) edge rows is ~500k join probes per task per round —
     * sizing at a shuffle-efficiency number (first attempt: 32 MB) left
-    * ScaleSmoke's ccskew adversary (58 MB of edges, 12 rounds) running
+    * the ccskew adversary (58 MB of edges, 12 rounds) running
     * its rounds 2-wide on a 32-core host — measured 50.1 s vs the
     * 23.5 s r17 record; at 8 MB (8 partitions) it re-converged in
     * 25.9 s, back inside the noise band (OPTIMIZATION_r21.md). */

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import graft.operators.IndexStore.PublishSyntax
 import graft.operators.Fanout.SpreadSyntax
 import org.apache.spark.sql.functions._
@@ -713,7 +713,7 @@ object Multimodal {
       // frame is keyspace-bounded (<= 2^PhashCells rows) and feeds THREE
       // plan branches (both band-join sides + the keeper join) — without
       // the pin the corpus-shaped hash aggregate re-runs per branch
-      // (PlanDump r19: three Exchanges over the same agg)
+      // (r19 plan dump: three Exchanges over the same agg)
       nearDupKeepersFrom(
         state.groupBy(col("phash")).agg(min(col("id")).as("min_id"))
           // un-coalesce before pinning: AQE shrinks the KB-scale hash
@@ -771,7 +771,7 @@ object Multimodal {
         .withColumnRenamed("a_phash", "phash")
       // broadcast: nb aggregates the keyspace-bounded candidate set —
       // without the hint the no-stats side planned a sort-merge join
-      // (PlanDump r19)
+      // (r19 plan dump)
       perHash.join(broadcast(nb), Seq("phash"), "left")
         .select(col("phash"),
           least(col("min_id"), coalesce(col("nb_min"), col("min_id")))
@@ -1089,11 +1089,6 @@ object Multimodal {
       * mediamega row, never assumed broadcastable. */
     private[graft] val HammingBands64 = 8
 
-    /** Tier labels the LAST matcher plan construction pinned (band
-      * self-join b-side, keeper map) — measurement tripwire only
-      * (ScaleSmoke mediamega), the lastVerifyTier convention. */
-    @volatile private[graft] var lastTier: String = "unset"
-
     /** Per-hash frame with the two 32-bit halves as longs — tolerance is
       * defined at full 64-cell resolution; short hashes (pv NULL twin:
       * hi/lo absent) participate in exact grouping only. */
@@ -1122,11 +1117,10 @@ object Multimodal {
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows * HammingBands64,
           estRows * HammingBands64 * 112L)
-      val (bSide, tierB) = IndexStore.tieredHint(s,
+      val bSide = IndexStore.tieredHint(s,
         banded.select(col("phash").as("b_phash"), col("hi").as("b_hi"),
           col("lo").as("b_lo"), col("min_id").as("b_min"),
           col("band").as("b_band"), col("bv").as("b_bv")), estBanded)
-      lastTier = s"band=$tierB"
       banded.join(bSide,
         col("band") === col("b_band") && col("bv") === col("b_bv") &&
           col("phash") =!= col("b_phash"))
@@ -1160,8 +1154,7 @@ object Multimodal {
       val estNb =
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows, estRows * 80L)
-      val (nbSide, tierN) = IndexStore.tieredHint(s, nb, estNb)
-      lastTier = s"$lastTier,keeper=$tierN"
+      val nbSide = IndexStore.tieredHint(s, nb, estNb)
       perHash.join(nbSide, Seq("phash"), "left")
         .select(col("phash"),
           least(col("min_id"), coalesce(col("nb_min"), col("min_id")))
@@ -1204,9 +1197,8 @@ object Multimodal {
       val estCc =
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows, estRows * 16L)
-      val (ccSide, tierC) = IndexStore.tieredHint(s,
+      val ccSide = IndexStore.tieredHint(s,
         cc.select(col("v"), col("label")), estCc)
-      lastTier = s"$lastTier,cc=$tierC"
       val full = perHash.filter(length(col("phash")) === Phash64Cells)
       full.join(ccSide, full("min_id") === col("v"), "left")
         .select(col("phash"),
@@ -1567,7 +1559,7 @@ object Multimodal {
       val estK =
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows, estRows * 80L)
-      val (kSide, _) = IndexStore.tieredHint(s, keepers, estK)
+      val kSide = IndexStore.tieredHint(s, keepers, estK)
       state.join(kSide, Seq("phash"))
         .select(col("id"), col("phash"), col("keep_id"),
           (col("id") =!= col("keep_id")).as("is_dup"))
@@ -1666,7 +1658,7 @@ object Multimodal {
       val estK =
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows, estRows * 80L)
-      val (kSide, _) = IndexStore.tieredHint(s, keepers, estK)
+      val kSide = IndexStore.tieredHint(s, keepers, estK)
       state.join(kSide, Seq("phash"))
         .select(col("id"), col("phash"), col("keep_id"),
           (col("id") =!= col("keep_id")).as("is_dup"))

@@ -2,9 +2,9 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.Exact._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.IntegerType
 
 /** Relational operator catalog — every SURVEY.md §2 operator re-expressed
   * over the driver test tables, Spark-first.

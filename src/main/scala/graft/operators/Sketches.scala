@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.QueryDef
-import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.operators.Fanout.SpreadSyntax
 import org.apache.spark.sql.functions._
@@ -344,7 +343,6 @@ object Sketches {
     * per-row hashing is the term that grows with the corpus. At 5%
     * benchmark share of a 27k-shingle corpus the set fraction is
     * ~8.5%, so the false-positive rate is ~0.085^4 ≈ 5e-5. */
-  private val BloomBits = 1 << 16
   private val BloomK = 4
 
   /** The shared digest; position i is hex chars [4i+1, 4i+4]. */

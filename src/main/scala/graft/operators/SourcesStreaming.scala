@@ -629,7 +629,7 @@ object SourcesStreaming {
     "st02_stream_dedup",
     (s, d) => {
       import graft.functions.TextFunctions.fingerprint
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.OutputMode
       // per-partition state-store commit overhead dominates a bounded
       // drain: the shared drain session scopes the stream to 4 stores
       // (see graft.streaming.Drain) without touching this session's conf
@@ -665,7 +665,7 @@ object SourcesStreaming {
     (s, d) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.EventsStream
       val (q, t) = graft.streaming.Drain.toTable(
         s, "graft_stream_sessions", OutputMode.Append) { s2 =>
@@ -710,7 +710,7 @@ object SourcesStreaming {
   val st04 = QueryDef(
     "st04_stream_stream_join",
     (s, d) => {
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.EventsStream
       val (_, t) = graft.streaming.Drain.toTable(
         s, "graft_stream_join", OutputMode.Append) { s2 =>
@@ -750,7 +750,7 @@ object SourcesStreaming {
   val st05 = QueryDef(
     "st05_stream_cms",
     (s, d) => {
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.OutputMode
       graft.functions.TextExpressions.register(s)
       val (_, t) = graft.streaming.Drain.toTable(
         s, "graft_stream_cms", OutputMode.Complete) { s2 =>
@@ -814,7 +814,7 @@ object SourcesStreaming {
   val st06 = QueryDef(
     "st06_stream_watermark_dedup",
     (s, d) => {
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.EventsStream
       val (q, t) = graft.streaming.Drain.toTable(
         s, "graft_stream_wm_dedup", OutputMode.Append) { s2 =>
@@ -858,7 +858,7 @@ object SourcesStreaming {
   val st07 = QueryDef(
     "st07_stream_static_join",
     (s, d) => {
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+      import org.apache.spark.sql.streaming.OutputMode
       import org.apache.spark.sql.types.DecimalType
       import graft.streaming.EventsStream
       val (_, t) = graft.streaming.Drain.toTable(
@@ -949,7 +949,7 @@ object SourcesStreaming {
     * view×click candidate product is quadratic and lands on ONE
     * state-store task. Sub-keying bounds each probe to its two
     * buckets' rows and spreads the hot key across partitions
-    * (measured in ScaleSmoke `stskew`). st04 remains the default:
+    * (measured in the `stskew` scale run, PLANS.md). st04 remains the default:
     * on un-skewed traffic the sub-keyed plan stores the view side
     * twice and pays an explode for no benefit. */
   val st09 = QueryDef(
@@ -1226,7 +1226,7 @@ object SourcesStreaming {
         val estK =
           if (estRows < 0) -1L
           else IndexStore.estimateBytes(estRows, estRows * 80L)
-        val (kSide, _) = IndexStore.tieredHint(s2, keepers, estK)
+        val kSide = IndexStore.tieredHint(s2, keepers, estK)
         val arriving = s2.readStream
           .schema(DocStreamSchema)
           .option("pathGlobFilter", "documents.parquet")

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.Exact._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the events table.
@@ -120,7 +120,7 @@ object EventsStream {
     * matching work spreads across bucket keys instead of landing on one
     * state-store partition task (the streaming analog of the batch
     * hot-shingle/salting hatch; the adversary measurement that motivated
-    * it is ScaleSmoke `stskew`).
+    * it is the `stskew` scale run, PLANS.md).
     *
     * Exactness: bucket width equals the attribution window, and a
     * qualifying pair has `0 < click_ts - view_ts <= W`, so the click's
@@ -137,7 +137,7 @@ object EventsStream {
     * history — per-probe candidate work drops from O(user's state rows)
     * to O(rows per bucket), and distinct buckets hash to different state
     * partitions, so the hot key parallelizes. Measured on the stskew
-    * adversary (one user holding 25% of 400k events, ScaleSmoke
+    * adversary (one user holding 25% of 400k events, PLANS.md
     * `stskew`): drain 140.4s → 2.9s, identical 89,552-pair output —
     * below even the plain join's un-skewed 5.1s wall, because bucket
     * pruning cuts candidate probes on flat traffic too. Cost: view-side

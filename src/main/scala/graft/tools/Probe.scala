@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dumps the formatted physical plan of selected catalog queries —
-  * the `.explain("formatted")` audit loop. Usage:
+  * the `.explain("formatted")` audit loop. Prints to stdout, or with
+  * `GRAFT_PLANS_OUT=<dir>` writes `<dir>/<name>.txt` per query. Usage:
   *   sbt "runMain graft.tools.Plans q09_regression_join e01_sessionization"
   * (no args = a default headline set). */
 object Plans {
@@ -20,10 +21,20 @@ object Plans {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q09_regression_join", "q11_star_rollup", "q14_pricing_summary",
         "e01_sessionization", "j01_asof_join", "s01_cosine_pairs")
-    val qs = graft.SparkEntry.queries
+    val outDir = sys.env.get("GRAFT_PLANS_OUT")
+    outDir.foreach(dir => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir)))
     names.foreach { n =>
-      println(s"\n===================== $n =====================")
-      qs(n)(spark, d).explain("formatted")
+      val plan = graft.SparkEntry.queries(n)(spark, d).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      graft.Lifecycle.release(spark)
+      outDir match {
+        case None =>
+          println(s"\n===================== $n =====================")
+          println(plan)
+        case Some(dir) =>
+          java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$n.txt"), plan)
+          println(s"dumped $n")
+      }
     }
     spark.stop()
   }
@@ -199,8 +210,6 @@ object TimeQueries {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "true"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -5,7 +5,7 @@ package org.apache.spark
   * measurement mains need a DETERMINISTIC "all task-end events
   * delivered" barrier before reading listener-fed accumulators — a
   * fixed sleep undercounts whenever the async bus is still draining a
-  * large job's events (r19 ADVICE on ScaleSmoke.metered). Only Spark's
+  * large job's events (r19 ADVICE). Only Spark's
   * public artifact is referenced. */
 object GraftListenerBus {
   /** Block until the live listener bus queue is empty or `timeoutMs`

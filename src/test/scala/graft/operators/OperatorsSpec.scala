@@ -253,10 +253,13 @@ class OperatorsSpec extends SparkSpec {
     assert("hashpartitioning".r.findAllIn(lp).length <= 5, s"plan:\n$lp")
     assert(hx(TextDedup.t07.fn(spark, sf)) == 0)
     // t08's one remaining exchange (the chunk-hash clustering) is ELIDED
-    // outright when the byte-derived kernel width is 1 at spec scale — a
+    // outright when the byte-derived kernel width is 1 — a
     // SinglePartition child satisfies the clustering requirement, so
-    // EnsureRequirements adds no shuffle. Upper bound, same spirit as lp's.
-    assert(hx(TextDedup.t08.fn(spark, sf)) <= 1)
+    // EnsureRequirements adds no shuffle. Exact, derived from the width
+    // of t08's kernel input (the documents scan).
+    val t08Width = Fanout.widthFor(graft.Tables.documents(spark, sf))
+    assert(hx(TextDedup.t08.fn(spark, sf)) == (if (t08Width == 1) 0 else 1),
+      s"t08 kernel width $t08Width")
   }
 
   test("decontamination broadcasts the benchmark shingle side") {
@@ -397,7 +400,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("t26 chunk dedup: exact-replica docs keep zero spans; clean docs round-trip") {
-    import org.apache.spark.sql.functions.col
     val rows = TextDedup.t26.fn(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
     // independent driver-side re-implementation over the raw corpus

@@ -34,23 +34,19 @@ class PairIndexDeltaSpec extends SparkSpec {
   }
 
   test("persisted BandIndex path is bit-identical to the inline kernel") {
-    // the size gate keeps gate-scale corpora inline; force both arms and
-    // pin equality — the invariant that makes the gate a pure
-    // optimization (the persisted table IS the kernel's output)
-    val prev = spark.conf.getOption("spark.graft.bands.mode")
-    try {
-      spark.conf.set("spark.graft.bands.mode", "inline")
-      val inline = pairs(TextDedup.t34.fn(spark, sf))
-      spark.conf.set("spark.graft.bands.mode", "persisted")
-      val persisted = pairs(TextDedup.t34.fn(spark, sf))
-      assert(persisted == inline,
-        s"missing=${inline.keySet -- persisted.keySet} " +
-          s"extra=${persisted.keySet -- inline.keySet}")
-      assert(persisted.nonEmpty)
-    } finally {
-      prev.fold(spark.conf.unset("spark.graft.bands.mode"))(
-        spark.conf.set("spark.graft.bands.mode", _))
-    }
+    // the size gate keeps gate-scale corpora inline; compare both arms'
+    // band rows directly — pairs are a pure function of bands, so this
+    // is the invariant that makes the gate a pure optimization (the
+    // persisted table IS the kernel's output)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "band_idx", "band_hash").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val inline = rows(TextDedup.bandsFrame(spark, sf))
+    val persisted = rows(TextDedup.BandIndex.ensure(spark, sf))
+    assert(persisted == inline,
+      s"missing=${(inline -- persisted).take(5)} " +
+        s"extra=${(persisted -- inline).take(5)}")
+    assert(persisted.nonEmpty)
   }
 
   test("promotion ring: every promoted state == from-scratch rebuild of its present set") {

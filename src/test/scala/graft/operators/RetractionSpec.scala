@@ -87,7 +87,6 @@ class RetractionSpec extends SparkSpec {
     // as a probe neighbor — the grow is visible, not just present in
     // the view; (b) no tombstoned vector is served as a neighbor under
     // the grow — the delta append cannot resurrect a deletion
-    import org.apache.spark.sql.functions._
     val rows = Similarity.s18.fn(spark, sf).collect()
     graft.Lifecycle.release(spark)
     assert(rows.exists(_.getLong(1) >= 10000000L),

@@ -44,7 +44,12 @@ class ReferenceGoldenSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  test("ingest loads the reference files verbatim, lossless split") {
+  /** A test whose golden values come from the reference bytes: it fails
+    * with one message naming any missing sample file before reading. */
+  private def goldenTest(name: String)(body: => Any): Unit =
+    test(name) { ReferenceFiles.requireIn(ref); body }
+
+  goldenTest("ingest loads the reference files verbatim, lossless split") {
     assert(tables.summaryLine.count() == 4)
     assert(tables.winCounter.count() == 96)
     // 6 samples + the JTL header row ingested as data (screened later
@@ -56,38 +61,40 @@ class ReferenceGoldenSpec extends SparkSpec {
     assert(spark.read.text(cfg.rejectedPath).count() == 675)
   }
 
-  test("Q1/Q2/Q3 — today's Avg/Max/Min summary metric") {
+  goldenTest("Q1/Q2/Q3 — today's Avg/Max/Min summary metric") {
     assert(rows(Queries.dailyMetric(tables.summaryLine, runDate, "Avg")) == Seq(Seq("12661")))
     assert(rows(Queries.dailyMetric(tables.summaryLine, runDate, "Max")) == Seq(Seq("12661")))
     assert(rows(Queries.dailyMetric(tables.summaryLine, runDate, "Min")) == Seq(Seq("12661")))
   }
 
-  test("Q4 — latest wincounter execution timestamp") {
+  goldenTest("Q4 — latest wincounter execution timestamp") {
     assert(rows(Queries.latestExecution(tables.winCounter)) ==
       Seq(Seq(java.sql.Timestamp.valueOf("2024-07-30 15:30:13"))))
   }
 
-  test("Q5 — historic average (single Avg row; Err row screened by metric filter)") {
+  goldenTest("Q5 — historic average (single Avg row; Err row screened by metric filter)") {
     assert(rows(Queries.historicAvg(tables.summaryLine)) == Seq(Seq(12661)))
   }
 
-  test("Q6 — trend series") {
+  goldenTest("Q6 — trend series") {
     assert(rows(Queries.trendSeries(tables.summaryLine)) ==
       Seq(Seq(java.sql.Date.valueOf("2024-07-30"), 12661)))
   }
 
-  test("Q7 — today's site-view samples (1 of 6: only one rm carries 'Site:')") {
+  goldenTest("Q7 — today's site-view samples (1 of 6: only one rm carries 'Site:')") {
     assert(rows(Queries.todaysSamples(tables.performanceSamples, runDate)) == Seq(Seq(
       12661, "0", "true", "Interact Viz Test",
       "Site: traimgtraimgprod; Workbook: StartTimeAnalysisv202403; View: ExamStartAnalysis;")))
   }
 
+  // A plain test: missing sample files also yield empty results, so
+  // this golden cannot tell them apart and runs without the files.
   test("Q8a/Q8b — empty: the sole site-view sample equals its own average") {
     assert(rows(Queries.regressions(tables.performanceSamples, runDate)).isEmpty)
     assert(rows(Queries.improvements(tables.performanceSamples, runDate)).isEmpty)
   }
 
-  test("runDaily end-to-end over the reference files") {
+  goldenTest("runDaily end-to-end over the reference files") {
     val sink = new CaptureEmailSink
     val e2eCfg = cfg.copy(rejectedPath = scratch.resolve("rejected-e2e").toString)
     val html = Pipeline.runDaily(spark, e2eCfg, runDate, sink)
