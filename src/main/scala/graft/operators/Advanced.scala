@@ -115,8 +115,7 @@ object Advanced {
     * keyed on the embeddings table fingerprint. */
   private[operators] object EmbDedupIndex {
     private[operators] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_embdedup_" +
-        IndexStore.corpusFingerprint(d, "embeddings")
+      IndexStore.stateDir("embdedup", d, "embeddings")
 
     def ensure(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
       val dir = IndexStore.ensure(indexDirFor(d), "keep/_SUCCESS") { tmp =>
@@ -1762,7 +1761,7 @@ object Advanced {
     * vec_id % 5 == 4, the shared slice conventions) arrives:
     *
     *  1. text: the persisted RESIDENT pair index
-    *     ([[TextDedup.ResidentPairIndex]] — yesterday's state) is grown
+    *     ([[TextDedup.DailyPairIndex]]'s night 0 — yesterday's state) is grown
     *     by the t34 delta ([[TextDedup.pairDelta]]: slice bands probe
     *     the corpus band index, candidates exact-verified) — an APPEND,
     *     never a corpus re-pair;
@@ -1790,7 +1789,7 @@ object Advanced {
   val c04 = QueryDef(
     "c04_nightly_maintenance",
     (s, d) => {
-      val resident = TextDedup.ResidentPairIndex.ensure(s, d)
+      val resident = TextDedup.DailyPairIndex.segment(s, d, 0)
       val grown = resident.unionByName(TextDedup.pairDelta(s, d))
       val keep = TextDedup.probeKeep(s, d, grown)
       graft.functions.VectorExpressions.register(s)
@@ -1842,22 +1841,18 @@ object Advanced {
   val c05 = QueryDef(
     "c05_ring_promotion",
     (s, d) => {
-      val nights = 0 to TextDedup.PromotedPairIndex.SliceRems.size
-      nights.map { k =>
-        TextDedup.PromotedPairIndex.ensure(s, d, k)
+      val ring = TextDedup.PromotedPairIndex
+      (0 to ring.schedule.nights).map { k =>
+        ring.segmented(s, d, k)
           .select(lit(k).as("night"), col("doc1"), col("doc2"), col("jaccard"))
       }.reduce(_ unionByName _)
         .orderBy(col("night"), col("doc1"), col("doc2"))
     },
     Some {
-      val rems = TextDedup.PromotedPairIndex.SliceRems
-      val branches = (0 to rems.size).map { k =>
-        val future = rems.drop(k)
-        val cond =
-          if (future.isEmpty) "TRUE"
-          else future.map(r => s"doc1 % 10 <> $r AND doc2 % 10 <> $r")
-            .mkString(" AND ")
-        s"SELECT $k AS night, doc1, doc2, jaccard FROM jp WHERE $cond"
+      val sched = TextDedup.PromotedPairIndex.schedule
+      val branches = (0 to sched.nights).map { k =>
+        s"""SELECT $k AS night, doc1, doc2, jaccard FROM jp
+           |WHERE ${sched.presentSql(k, "doc1")} AND ${sched.presentSql(k, "doc2")}""".stripMargin
       }
       s"""WITH jp AS (${TextDedup.JaccardPairsSql})
          |${branches.mkString("\nUNION ALL\n")}
@@ -1869,7 +1864,7 @@ object Advanced {
     * segment-tail FOLD: [[TextDedup.PromotedPairIndex.maintained]]
     * serves the ratio-gated folded layout (one size-targeted segment
     * replacing the night-0 + delta tail) once
-    * [[TextDedup.PromotedPairIndex.foldDue]] trips — which the
+    * [[Ring.foldDue]] trips — which the
     * fixture's delta tail does at every SF — and this gate probes THAT
     * layout: the served pair set, plus the t25 keep-mask probe run over
     * it (the consumer a fold could silently corrupt), both hash-checked
@@ -1981,18 +1976,18 @@ object Advanced {
   val c08 = QueryDef(
     "c08_ring_soak",
     (s, d) => {
-      import TextDedup.SoakRing
+      val ring = TextDedup.SoakRing
       val docsDf = Tables.documents(s, d)
       val nullId2 = lit(null).cast("long")
-      (0 to 4).map { k =>
-        val pairs = SoakRing.served(s, d, k)
+      (0 to ring.schedule.nights).map { k =>
+        val pairs = ring.served(s, d, k)
           .select(lit(k).as("night"), lit("pairs").as("stage"),
             col("doc1").as("id"), col("doc2").as("id2"),
             col("jaccard").as("val"))
         if (k == 0) pairs
         else {
-          val batch = docsDf.filter(SoakRing.batchPred(k)).select(col("doc_id"))
-          val keep = TextDedup.dedupKeepMask(SoakRing.served(s, d, k), batch)
+          val batch = docsDf.filter(ring.schedule.batchPred(k)).select(col("doc_id"))
+          val keep = TextDedup.dedupKeepMask(ring.served(s, d, k), batch)
             .select(lit(k).as("night"), lit("keep").as("stage"),
               col("doc_id").as("id"), nullId2.as("id2"),
               when(col("keep"), 1.0).otherwise(0.0).as("val"))
@@ -2002,22 +1997,22 @@ object Advanced {
         .orderBy(col("night"), col("stage"), col("id"), col("id2"))
     },
     Some {
-      import TextDedup.SoakRing
+      val sched = TextDedup.SoakRing.schedule
       // per-night CTEs: the night's pair view, its batch, and the ONE
       // shared keep-dominator calculus instantiated on them
       // (TextDedup.keepDomCtesFor — an inline copy here was the r17
       // review's drift finding)
-      val nightCtes = (1 to 4).map { k =>
-        def p(c: String) = SoakRing.presentSql(k, c)
+      val nightCtes = (1 to sched.nights).map { k =>
+        def p(c: String) = sched.presentSql(k, c)
         s"""jp$k AS (SELECT doc1, doc2 FROM jp
            |         WHERE ${p("doc1")} AND ${p("doc2")}),
            |batch$k AS (SELECT doc_id FROM documents
-           |            WHERE ${SoakRing.batchSql(k, "doc_id")}),
+           |            WHERE ${sched.batchSql(k, "doc_id")}),
            |${TextDedup.keepDomCtesFor(s"und$k", s"dom$k", s"jp$k", s"batch$k",
-               c => SoakRing.batchSql(k, c))}""".stripMargin
+               c => sched.batchSql(k, c))}""".stripMargin
       }
-      val nights = (0 to 4).map { k =>
-        def p(c: String) = SoakRing.presentSql(k, c)
+      val nights = (0 to sched.nights).map { k =>
+        def p(c: String) = sched.presentSql(k, c)
         val pairsBranch =
           s"""SELECT CAST($k AS INTEGER) AS night, 'pairs' AS stage,
              |       doc1 AS id, doc2 AS id2, jaccard AS val

@@ -333,13 +333,13 @@ object Corpus {
   /** Persisted resident CLUSTER LABELS — yesterday's label table, the
     * state the incremental step (t35) maintains: connected components
     * over the resident pair index, published once per corpus
-    * fingerprint (the [[TextDedup.ResidentPairIndex]] convention). */
+    * fingerprint (the [[IndexStore]] convention). */
   private[operators] object LabelIndex {
     private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_labels_l1_${IndexStore.corpusFingerprint(d, "documents")}"
+      IndexStore.stateDir("labels_l1", d, "documents")
     def ensure(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
       val dir = IndexStore.ensure(indexDirFor(d), "labels/_SUCCESS") { tmp =>
-        val pairs = TextDedup.ResidentPairIndex.ensure(s, d)
+        val pairs = TextDedup.DailyPairIndex.segment(s, d, 0)
           .select(col("doc1"), col("doc2"))
         val und = pairs.select(col("doc1").as("src"), col("doc2").as("dst"))
           .unionByName(pairs.select(col("doc2").as("src"), col("doc1").as("dst")))
@@ -394,16 +394,16 @@ object Corpus {
     (s, d) => {
       val resident = LabelIndex.ensure(s, d)
       // the delta arrives from its PERSISTED product (t34's artifact,
-      // TextDedup.DeltaPairIndex) — the nightly split where the band
+      // TextDedup.DailyPairIndex's night 1) — the nightly split where the band
       // probe runs once per slice and every consumer reads; the gate's
       // live cost is the splice + the delta-bounded CC (r17)
-      val delta = TextDedup.DeltaPairIndex.ensure(s, d)
+      val delta = TextDedup.DailyPairIndex.segment(s, d, 1)
         .select(col("doc1"), col("doc2"))
       val endpoints = delta.select(col("doc1").as("doc_id"))
         .unionByName(delta.select(col("doc2").as("doc_id"))).distinct()
       val affected = resident.join(endpoints, Seq("doc_id"))
         .select(col("cluster_id")).distinct()
-      val residentPairs = TextDedup.ResidentPairIndex.ensure(s, d)
+      val residentPairs = TextDedup.DailyPairIndex.segment(s, d, 0)
         .select(col("doc1"), col("doc2"))
       val affectedPairs = residentPairs
         .join(resident.select(col("doc_id").as("doc1"), col("cluster_id")),

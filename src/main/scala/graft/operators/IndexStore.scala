@@ -1,14 +1,21 @@
 package graft.operators
 
 /** Corpus-fingerprinted persisted-index machinery, shared by every
-  * operator that amortizes an expensive build across executions
-  * ([[Similarity.IvfIndex]] centroids/assignments, [[TextDedup.PairIndex]]
-  * near-dup pairs, [[Similarity.SigIndex]] LSH signatures). At 100 TB
-  * these artifacts are THE expensive intermediates — a production
-  * deployment builds each once per corpus version as a scheduled job and
-  * every consumer reads; recomputing one inside each consumer query is
-  * the difference between one LSH pass and three per pipeline run
-  * (round-7 t07/t11/t19).
+  * operator that amortizes an expensive build across executions. At
+  * 100 TB these artifacts are THE expensive intermediates — a
+  * production deployment builds each once per corpus version as a
+  * scheduled job and every consumer reads; recomputing one inside each
+  * consumer query is the difference between one LSH pass and three per
+  * pipeline run (round-7 t07/t11/t19).
+  *
+  * Consumers: every published artifact is named by [[stateDir]] under
+  * the one [[stateRoot]]. The one-shot indexes call [[ensure]] directly
+  * ([[Similarity.SigIndex]], [[Similarity.IvfIndex]],
+  * [[Similarity.IvfIncIndex]], [[TextDedup.PairIndex]],
+  * [[TextDedup.BandIndex]], [[TextDedup.HotShingleProfile]],
+  * [[Corpus]]'s label index, the SourcesStreaming rewrites); every
+  * state that grows, folds and retracts night by night is a [[Ring]],
+  * which publishes through the same [[ensure]].
   *
   * Guarantees:
   *  - a regenerated corpus at the SAME path changes the fingerprint
@@ -21,10 +28,10 @@ package graft.operators
   *    a torn leftover from a crashed pre-rename build.
   *
   * NOT covered: CODE staleness — the fingerprint sees the corpus, not
-  * the builder. An artifact whose layout/derivation changes must bump a
-  * layout-version salt in its dir name (the `_l1` convention:
-  * SourcesStreaming.RewriteLayoutV, BandIndex) or a warm /tmp serves
-  * the old code's output.
+  * the builder. An artifact whose layout or derivation changes must
+  * change its [[stateDir]] name: a ring bumps [[Ring.Layout]] (or its
+  * family's kernel version), a one-shot index the layout salt in its
+  * `name`. Otherwise a warm state root serves the old code's output.
   */
 private[operators] object IndexStore {
 
@@ -153,6 +160,18 @@ private[operators] object IndexStore {
       df.hint("SHUFFLE_HASH")
     else df.hint("MERGE")
   }
+
+  /** The root every persisted artifact lives under: the JVM temp dir,
+    * read here and nowhere else. */
+  def stateRoot: String = sys.props("java.io.tmpdir")
+
+  /** The ONE naming function for published state:
+    * `<stateRoot>/graft_<name>_<fingerprint of d/table><suffix>`.
+    * `name` carries the artifact family and its layout salt, `suffix`
+    * the build parameters and instance tags. */
+  def stateDir(name: String, d: String, table: String,
+      suffix: String = ""): String =
+    s"$stateRoot/graft_${name}_${corpusFingerprint(d, table)}$suffix"
 
   /** Fingerprint of a corpus table: name, length and mtime of every part
     * of `<d>/<table>.parquet`. (A path hashCode scheme could collide and

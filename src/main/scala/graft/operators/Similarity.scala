@@ -283,7 +283,7 @@ object Similarity {
     * buckets are a pure function of the corpus. */
   object SigIndex {
     private[operators] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_sig_${IndexStore.corpusFingerprint(d, "embeddings")}_t${NumTables}p$PlanesPerTable"
+      IndexStore.stateDir("sig", d, "embeddings", s"_t${NumTables}p$PlanesPerTable")
 
     private def signatures(s: SparkSession, d: String): DataFrame =
       withNorm(s, d)
@@ -397,7 +397,7 @@ object Similarity {
     val K = 16
 
     private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_ivf_${IndexStore.corpusFingerprint(d, "embeddings")}_k$K"
+      IndexStore.stateDir("ivf", d, "embeddings", s"_k$K")
 
     /** (centroids, assigned) — building first if this corpus fingerprint
       * has no persisted index yet (fingerprinting, atomic publication
@@ -877,9 +877,9 @@ object Similarity {
     private[graft] val NewSliceRem = 4
 
     private[graft] def baseDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_ivfinc_${IndexStore.corpusFingerprint(d, "embeddings")}_k${IvfIndex.K}_base"
+      IndexStore.stateDir("ivfinc", d, "embeddings", s"_k${IvfIndex.K}_base")
     private[graft] def deltaDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_ivfinc_${IndexStore.corpusFingerprint(d, "embeddings")}_k${IvfIndex.K}_delta"
+      IndexStore.stateDir("ivfinc", d, "embeddings", s"_k${IvfIndex.K}_delta")
 
     // ------------------------------------------------- tombstone store
     //
@@ -911,7 +911,7 @@ object Similarity {
     // tomb2: layout v2 adds the DIGEST sidecar (the _l1 dir-version
     // convention — a warm r18-vintage store has no digest to compare)
     private[graft] def tombDirFor(d: String, salt: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_ivfinc_${IndexStore.corpusFingerprint(d, "embeddings")}_k${IvfIndex.K}_tomb2_$salt"
+      IndexStore.stateDir("ivfinc", d, "embeddings", s"_k${IvfIndex.K}_tomb2_$salt")
 
     /** r18's pre-digest layout dir for the same instance — DETECTION
       * only, never served. The r18→r19 layout bump silently orphaned
@@ -927,8 +927,7 @@ object Similarity {
       * migration (v2 is authoritative; the publish path removes it on
       * the next re-publish). */
     private def orphanedV1Dir(d: String, salt: String): Option[String] = {
-      val v1 = s"${sys.props("java.io.tmpdir")}/graft_ivfinc_" +
-        s"${IndexStore.corpusFingerprint(d, "embeddings")}_k${IvfIndex.K}_tomb_$salt"
+      val v1 = IndexStore.stateDir("ivfinc", d, "embeddings", s"_k${IvfIndex.K}_tomb_$salt")
       if (new java.io.File(s"$v1/ids/_SUCCESS").exists()) Some(v1) else None
     }
 
@@ -1215,26 +1214,16 @@ object Similarity {
     // rename+marker as every index; a crash mid-compaction leaves the
     // segmented index serving.
 
-    /** Rebase when the delta has grown to ≥ this fraction of the base:
-      * below it the fold's full-index rewrite costs more than the read
-      * amplification it removes; above it the delta is no longer "small
-      * new data" and each probe pays the segment tail. 0.2 is the
-      * standard LSM minor-compaction shape (fold when the new layer is
-      * a fifth of the old). */
-    private[graft] val CompactRatio = 0.2
-
-    /** The size/ratio policy: true when the delta segment's bytes are ≥
-      * [[CompactRatio]] × base bytes. Degraded listings (-1) are never
-      * "due" — compaction is an optimization; the segmented union stays
-      * the always-correct reader. */
-    private[graft] def compactionDue(s: SparkSession, d: String): Boolean = {
-      val bb = IndexStore.dirBytes(s"${baseDirFor(d)}/assigned")
-      val db = IndexStore.dirBytes(s"${deltaDirFor(d)}/assigned")
-      bb > 0 && db >= 0 && db.toDouble >= CompactRatio * bb
-    }
+    /** The size/ratio policy: [[Ring.foldDue]] over the base and the
+      * one delta segment. Degraded listings (-1) are never "due" —
+      * compaction is an optimization; the segmented union stays the
+      * always-correct reader. */
+    private[graft] def compactionDue(s: SparkSession, d: String): Boolean =
+      Ring.foldDue(IndexStore.dirBytes(s"${baseDirFor(d)}/assigned"),
+        Seq(IndexStore.dirBytes(s"${deltaDirFor(d)}/assigned")))
 
     private[graft] def compactedDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_ivfinc_${IndexStore.corpusFingerprint(d, "embeddings")}_k${IvfIndex.K}_compact"
+      IndexStore.stateDir("ivfinc", d, "embeddings", s"_k${IvfIndex.K}_compact")
 
     /** Fold base ∪ delta into one published segment (centroids copied
       * bit-identically — the frozen-quantizer contract survives
@@ -1297,7 +1286,7 @@ object Similarity {
     // ONE corpus fingerprint are different indexes — without the salt
     // the first publication would silently serve every later budget
     private[graft] def refinedDirFor(d: String, maxCellRows: Long): String =
-      s"${sys.props("java.io.tmpdir")}/graft_ivfinc_${IndexStore.corpusFingerprint(d, "embeddings")}_k${IvfIndex.K}_refined_b$maxCellRows"
+      IndexStore.stateDir("ivfinc", d, "embeddings", s"_k${IvfIndex.K}_refined_b$maxCellRows")
 
     /** Refine cells holding more than `maxCellRows` vectors: each hot
       * cell is re-fit with ceil(n/maxCellRows) sub-centroids (fixed
@@ -1489,7 +1478,7 @@ object Similarity {
       driftRatio(s, d) >= ReclusterRatio
 
     private[graft] def gen2DirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_ivfinc_${IndexStore.corpusFingerprint(d, "embeddings")}_k${IvfIndex.K}_g2"
+      IndexStore.stateDir("ivfinc", d, "embeddings", s"_k${IvfIndex.K}_g2")
 
     /** The scheduled response to drift: a fresh KMeans fit over the
       * WHOLE grown corpus MINUS the ring's published tombstones,
@@ -1566,7 +1555,8 @@ object Similarity {
       // (r17 VERDICT nit 1: s13's derived arm
       // was the single most expensive gate because this deterministic
       // frame — fixed derivation, frozen gen-1 centroids, publish-once
-      // tombstones — re-derived every pass; the DeltaPairIndex move).
+      // tombstones — re-derived every pass; the persisted-delta move of
+      // TextDedup.DailyPairIndex).
       // The persisted read's fold order can differ from the computed
       // frame's, but the policy compares at orders-of-magnitude
       // separation (see driftRatioFromAssigned's doc), so an arm can

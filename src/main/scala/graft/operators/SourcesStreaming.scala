@@ -22,7 +22,7 @@ object SourcesStreaming {
     * corpus dir (hex of the path hash: collisions only re-overwrite a
     * scratch dir that the same query rewrites anyway). */
   private[operators] def roundtripDir(prefix: String, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_roundtrip_${prefix}_" +
+    s"${IndexStore.stateRoot}/graft_roundtrip_${prefix}_" +
       Integer.toHexString(d.hashCode)
 
   /** Memoized per-parent WRITER session with the modern INT64-micros
@@ -284,11 +284,11 @@ object SourcesStreaming {
     * rewrite's output layout changes. */
   private val RewriteLayoutV = "l1"
   private[operators] def compactDir(d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_compact_${RewriteLayoutV}_${IndexStore.corpusFingerprint(d, "lineitem")}"
+    IndexStore.stateDir(s"compact_$RewriteLayoutV", d, "lineitem")
   private[operators] def clusterDir(d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cluster_${RewriteLayoutV}_${IndexStore.corpusFingerprint(d, "events")}"
+    IndexStore.stateDir(s"cluster_$RewriteLayoutV", d, "events")
   private[operators] def zorderDir(d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_zorder_${RewriteLayoutV}_${IndexStore.corpusFingerprint(d, "events")}"
+    IndexStore.stateDir(s"zorder_$RewriteLayoutV", d, "events")
 
   val r06 = QueryDef(
     "r06_compaction",
@@ -1056,7 +1056,7 @@ object SourcesStreaming {
       val (_, t) = graft.streaming.Drain.toTable(
         s, "graft_stream_media_near_filter", OutputMode.Append) { s2 =>
         val keepers = Multimodal.MediaIndex.nearDupKeepers(
-          Multimodal.MediaIndex.maintained(s2, d))
+          Multimodal.MediaIndex.ring.maintained(s2, d))
         val arriving = s2.readStream
           .schema(DocStreamSchema)
           .option("pathGlobFilter", "documents.parquet")
@@ -1222,7 +1222,7 @@ object SourcesStreaming {
         s, "graft_stream_wide_media", OutputMode.Append) { s2 =>
         val estRows = WideMediaIndex.estRowsFor(d)
         val keepers = WideMediaIndex.nearDupKeepers(
-          s2, WideMediaIndex.maintained(s2, d), estRows)
+          s2, WideMediaIndex.ring.maintained(s2, d), estRows)
         val estK =
           if (estRows < 0) -1L
           else IndexStore.estimateBytes(estRows, estRows * 80L)

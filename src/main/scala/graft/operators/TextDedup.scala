@@ -490,7 +490,7 @@ object TextDedup {
     * instead of re-profiling the corpus. */
   object HotShingleProfile {
     private[operators] def indexDirFor(d: String, hotDf: Int): String =
-      s"${sys.props("java.io.tmpdir")}/graft_hotsh_l1_${IndexStore.corpusFingerprint(d, "documents")}_df$hotDf"
+      IndexStore.stateDir("hotsh_l1", d, "documents", s"_df$hotDf")
 
     /** Persist BOTH stats artifacts from ONE df aggregate: `hot`
       * (df >= hotDf, the skew-hatch routing set) and `matchable`
@@ -672,7 +672,7 @@ object TextDedup {
     // convention) — a banding change (NumHashes/rows per band/kernel seed)
     // must not be served from a warm pre-change publication
     private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_bands_l1_${IndexStore.corpusFingerprint(d, "documents")}"
+      IndexStore.stateDir("bands_l1", d, "documents")
 
     def ensure(s: SparkSession, d: String): DataFrame = {
       val dir = IndexStore.ensure(indexDirFor(d), "bands/_SUCCESS") { tmp =>
@@ -706,7 +706,7 @@ object TextDedup {
   /** Band self-join candidate pairs → exact verification, over an
     * explicit band frame — the ONE pairing body shared by the full build
     * ([[lshPairs]]) and the resident-only build
-    * ([[ResidentPairIndex]]). */
+    * ([[DailyPairIndex]]). */
   private def lshPairsFromBands(src: DataFrame, bands: DataFrame,
       estSetsBytes: Long = -1L): DataFrame = {
     val x = bands.select(col("doc_id").as("doc1"), col("band_idx"), col("band_hash"))
@@ -833,7 +833,7 @@ object TextDedup {
     * [[IndexStore]]. */
   object PairIndex {
     private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_${IndexStore.corpusFingerprint(d, "documents")}"
+      IndexStore.stateDir("pairs", d, "documents")
 
     /** The pair frame for corpus `d`, building + publishing first if
       * this corpus fingerprint has no index yet. Unordered — consumers
@@ -1784,380 +1784,85 @@ object TextDedup {
       setsBytesFor(d), avgDocBytesFor(d))
   }
 
-  /** Corpus-fingerprinted persisted pair index over the RESIDENT corpus
-    * only (doc_id % 10 != 7 — yesterday's snapshot in the daily-slice
-    * convention): the state a nightly maintenance job starts from. c04
-    * grows it with [[pairDelta]] and gates that resident ∪ delta equals
-    * the full rebuild. Same [[IndexStore]] contract as [[PairIndex]]. */
-  object ResidentPairIndex {
-    private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_res_l1_${IndexStore.corpusFingerprint(d, "documents")}"
-
-    def ensure(s: SparkSession, d: String): DataFrame = {
-      val dir = IndexStore.ensure(indexDirFor(d), "pairs/_SUCCESS") { tmp =>
-        lshPairsFromBands(docs(s, d),
-            corpusBands(s, d).filter(col("doc_id") % 10 =!= 7),
-            setsBytesFor(d))
-          .publishTo(s"$tmp/pairs")
-      }
-      s.read.parquet(s"$dir/pairs")
+  /** The pair rings' kernel: night 0's from-scratch LSH build over the
+    * docs present, or a grow night's band delta — the arriving batch's
+    * bands probe the present corpus's ([[bandDelta]]: O(slice × bands),
+    * never ∝ corpus). Both read the size-gated [[corpusBands]], so at
+    * scale the corpus side is a parquet read of the persisted
+    * [[BandIndex]]. Oracle equality rests on t07's premise: banding at
+    * these parameters finds every pair at or above the threshold
+    * (recall gate: SimilarityRecallSpec). */
+  private def pairKernel(s: SparkSession, d: String, present: Column,
+      batch: Option[Column]): DataFrame = {
+    val bands = corpusBands(s, d).filter(present)
+    batch match {
+      case None =>
+        lshPairsFromBands(docs(s, d).filter(present), bands, setsBytesFor(d))
+      case Some(b) =>
+        bandDelta(docs(s, d).filter(present), bands, bands.filter(b),
+          setsBytesFor(d), avgDocBytesFor(d))
     }
   }
 
-  /** The [[pairDelta]] product PERSISTED once per corpus fingerprint —
-    * the artifact split a nightly deployment actually runs: t34 gates
-    * the delta COMPUTATION (and stays live, it is the gate for exactly
-    * that), the delta's consumers read its written product. t35's
-    * incremental clustering consumes this instead of re-running the
-    * band probe per pass (r16 VERDICT slate #2a: the gate's live cost
-    * becomes the splice + bounded CC). Same [[IndexStore]] contract as
-    * every index. */
-  object DeltaPairIndex {
-    private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_dlt_l1_${IndexStore.corpusFingerprint(d, "documents")}"
+  /** A pair [[Ring]]: (doc1, doc2, jaccard) rows under `pairs/`,
+    * retracted by dropping every pair with a tombstoned endpoint
+    * ([[retractPairs]]). */
+  private def pairRing(name: String, steps: Ring.Step*): Ring =
+    new Ring(Ring.Schedule(name, steps: _*), "pairs", pairKernel,
+      retractPairs(_, _, "id"))
 
-    def ensure(s: SparkSession, d: String): DataFrame = {
-      val dir = IndexStore.ensure(indexDirFor(d), "pairs/_SUCCESS") { tmp =>
-        pairDelta(s, d).publishTo(s"$tmp/pairs")
-      }
-      s.read.parquet(s"$dir/pairs")
-    }
-  }
-
-  /** The segment-tail fold RATIO POLICY shared by the promotion ring
-    * ([[PromotedPairIndex]]) and the soak ring ([[SoakRing]]) — one
-    * calculus (the [[Similarity.IvfIncIndex.CompactRatio]] constant,
-    * shared with the vector ring) so the two pair rings cannot drift
-    * policies (r17 review finding). Degraded listings (-1) are never
-    * due — folding is an optimization; the segment union is always
-    * correct. */
-  private def pairFoldDue(baseDir: String, tailDirs: Seq[String]): Boolean = {
-    val bb = IndexStore.dirBytes(baseDir)
-    val tail = tailDirs.map(IndexStore.dirBytes)
-    bb > 0 && tail.forall(_ >= 0) &&
-      tail.sum.toDouble >= Similarity.IvfIncIndex.CompactRatio * bb
-  }
-
-  /** The folded WRITE shared by both rings' fold step. File sizing is
-    * publishTo's REBALANCE (count tracks bytes via
-    * advisoryPartitionSizeInBytes) — an explicit repartition(nFiles)
-    * here was DEAD CODE, removed by Catalyst's CollapseRepartition
-    * under the rebalance hint (r21 ADVICE), so it is gone rather than
-    * kept as a sizing that never applied. */
-  private def writeFoldedPairs(union: DataFrame, tmp: String): Unit =
-    union.publishTo(tmp)
+  /** The one-night maintenance split over the daily slice
+    * (doc_id % 10 == 7, the t25/t34 convention): night 0 is the
+    * RESIDENT pair index — yesterday's snapshot, the state a nightly job
+    * starts from — and night 1's segment is the [[pairDelta]] product
+    * persisted once per corpus fingerprint. c04 grows the resident with
+    * the live delta and gates resident ∪ delta against the full
+    * rebuild; t35's incremental clustering reads both published
+    * segments instead of re-running the band probe per pass. */
+  private[graft] val DailyPairIndex: Ring = pairRing("daily", Ring.Grow(7))
 
   /** N-night PROMOTION ring over the persisted pair index — the piece
-    * that closes the maintenance LOOP (r14 VERDICT slate #1): c04
-    * computes resident ∪ delta but never writes it back, so every night
-    * would start from the same resident. Here each night ENDS by
-    * atomically publishing the grown pair set as the next resident
-    * state, and night k+1 STARTS from night k's output:
+    * that closes the maintenance LOOP: each night ENDS by publishing its
+    * delta segment, and night k+1 STARTS from night k's published state
+    * (never a recompute). Slices arrive as doc_id % 10 == 3, then == 7
+    * (the daily-slice convention, so the last night is exactly the
+    * fixture's "today"), and the ratio-gated [[Ring.Fold]] after the
+    * last night bounds the read tail a year of segments would open.
     *
-    *  - night 0: from-scratch LSH build over the original resident
-    *    corpus (docs whose slice has not yet arrived);
-    *  - night k: read the PROMOTED state k-1, band-probe slice k
-    *    against the now-present corpus ([[bandDelta]] — cost ∝ slice,
-    *    never ∝ corpus), append, and promote the union as state k via
-    *    the same [[IndexStore.ensure]] rename+marker publication every
-    *    index uses (atomic: a crash mid-promotion leaves state k-1
-    *    serving; a torn pre-rename leftover is recovered).
-    *
-    * Slices arrive in [[SliceRems]] order (doc_id % 10 == 3, then == 7 —
-    * the second is the t25/t34/c04 daily-slice convention, so the ring's
-    * last night is exactly the fixture's "today"). The loop invariant —
-    * EVERY promoted state equals a from-scratch rebuild over the docs
-    * present that night, not just the final one — is what the c05 gate
-    * hash-checks against DuckDB's all-pairs Jaccard filtered to each
-    * night's present set.
-    *
-    * Scale: the promotion write is ∝ the pair set (sparse — the
-    * compressed artifact, never corpus-sized), the delta is
-    * O(slice × bands) against the size-gated persisted [[BandIndex]],
-    * and the previous state is READ, not recomputed — so per-night cost
-    * stays ∝ slice as the resident grows (measured: PLANS.md RING-LOOP).
-    * Reference anchor: the daily cron shape, `README.md:9`,
+    * The loop invariant — EVERY night's state equals a from-scratch
+    * rebuild over the docs present that night — is what c05 hash-checks
+    * (`segmented` per night); c06 gates the folded `maintained` view,
+    * and CompactionSpec pins arm equality and the policy edges. Scale:
+    * the nightly write is ∝ the slice's pairs, the delta is
+    * O(slice × bands), the previous state is READ (measured: PLANS.md
+    * RING-LOOP). Reference anchor: the daily cron shape, `README.md:9`,
     * `tabjolt_email.py:345-394`. */
-  object PromotedPairIndex {
-    /** Successive crawl-slice conventions, in arrival order. */
-    private[graft] val SliceRems: Seq[Int] = Seq(3, 7)
+  private[graft] val PromotedPairIndex: Ring =
+    pairRing("promo", Ring.Grow(3), Ring.Grow(7), Ring.Fold)
 
-    /** Docs present at the START of night `night`+1 / END of night
-      * `night`: the original resident plus slices 1..night. */
-    private[graft] def presentAt(night: Int): Column =
-      SliceRems.drop(night).foldLeft(lit(true))(
-        (acc, r) => acc && col("doc_id") % 10 =!= r)
-
-    // _l2: layout-version salt bump — a night's dir used to hold the
-    // FULL promoted state; it now holds only that night's SEGMENT (the
-    // IVF delta-segment model applied to the text ring), and a warm l1
-    // dir must not be served under the new meaning
-    private[graft] def stateDirFor(d: String, night: Int): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_ring_l2_${IndexStore.corpusFingerprint(d, "documents")}_n$night"
-
-    /** Publish night `night`'s SEGMENT if missing: night 0 is the
-      * from-scratch resident build, night k the slice-k band delta —
-      * each an immutable publish-once dir whose write cost is ∝ its own
-      * content. */
-    private def ensureSegment(s: SparkSession, d: String, night: Int): String =
-      IndexStore.ensure(stateDirFor(d, night), "pairs/_SUCCESS") { tmp =>
-        val seg =
-          if (night == 0)
-            lshPairsFromBands(docs(s, d).filter(presentAt(0)),
-              corpusBands(s, d).filter(presentAt(0)), setsBytesFor(d))
-          else {
-            val bands = corpusBands(s, d).filter(presentAt(night))
-            bandDelta(docs(s, d).filter(presentAt(night)),
-              bands, bands.filter(col("doc_id") % 10 === SliceRems(night - 1)),
-              setsBytesFor(d), avgDocBytesFor(d))
-          }
-        seg.publishTo(s"$tmp/pairs")
-      }
-
-    /** The promoted pair-index state after `night` nights — the union
-      * of the published segments 0..night, building any missing one
-      * first. SEGMENTED promotion (the [[Similarity.IvfIncIndex]]
-      * model applied to the text ring): a night publishes ONLY its
-      * delta segment, so the nightly write is ∝ the slice's pairs —
-      * rewriting the whole grown state every night was measured ∝
-      * STATE (12 s vs a 3-4 s delta at 125k docs, PLANS.md RING-LOOP),
-      * which at a year of nights is the same tail the IVF compaction
-      * bounds. When the segment count grows, fold with
-      * [[publishPairs]](ensure(...), dir) — the same ratio-gated rebase
-      * calculus as [[Similarity.IvfIncIndex.ensureCompacted]].
-      * Unordered — consumers sort. */
-    def ensure(s: SparkSession, d: String, night: Int): DataFrame = {
-      require(night >= 0 && night <= SliceRems.size,
-        s"ring has ${SliceRems.size} nights; got $night")
-      (0 to night).map(k => s.read.parquet(s"${ensureSegment(s, d, k)}/pairs"))
-        .reduce(_ unionByName _)
-    }
-
-    // ------------------------------------------------- segment-tail fold
-    //
-    // Segmented promotion bounds the WRITE (a night publishes only its
-    // delta segment) but re-opens the READ tail the IVF side already
-    // closed (r15 VERDICT slate #1): after a year of nights a reader
-    // unions ~365 pair segments unless an operator remembers to call
-    // publishPairs by hand. The fold below is IvfIncIndex's LSM rebase
-    // applied to the pair ring — the SAME ratio calculus decides WHEN
-    // (delta-tail bytes ≥ CompactRatio × resident segment), the fold
-    // rewrites the union as ONE size-targeted segment, publication is
-    // the same atomic rename+marker, and the segmented union stays the
-    // always-correct fallback reader. Pairs are copied rows, never
-    // recomputed, so the folded layout is row-identical by construction
-    // — which is exactly what the c06 gate hash-checks (c05's oracle
-    // restricted to the final night) and CompactionSpec pins directly.
-
-    private[graft] def foldedDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_ring_f1_${IndexStore.corpusFingerprint(d, "documents")}"
-
-    /** The ratio policy, shared constant with the vector ring
-      * ([[Similarity.IvfIncIndex.CompactRatio]]): fold when the delta
-      * segments' combined bytes reach that fraction of the night-0
-      * resident segment. Degraded listings (-1) are never due —
-      * folding is an optimization; the segment union is always
-      * correct. */
-    private[graft] def foldDue(d: String): Boolean =
-      pairFoldDue(s"${stateDirFor(d, 0)}/pairs",
-        (1 to SliceRems.size).map(k => s"${stateDirFor(d, k)}/pairs"))
-
-    /** Fold the whole segment tail into ONE published resident segment —
-      * cost ∝ pair-set bytes (the compressed artifact, never
-      * corpus-sized), a scheduled job at scale. Output file count is
-      * size-targeted (~128 MB) and floored at the parallelism, the
-      * [[Similarity.IvfIncIndex.ensureCompacted]] convention, so a year
-      * of small nightly files collapses without costing the probe its
-      * scan splits. */
-    def ensureFolded(s: SparkSession, d: String): String =
-      IndexStore.ensure(foldedDirFor(d), "pairs/_SUCCESS") { tmp =>
-        writeFoldedPairs(ensure(s, d, SliceRems.size), s"$tmp/pairs")
-      }
-
-    /** The maintained reader view of the ring's final state: the folded
-      * single segment once the ratio policy says the rebase has paid for
-      * itself, the segment union otherwise. Segments are ensured BEFORE
-      * the policy reads their sizes (the r15 call-order finding — a cold
-      * corpus would otherwise never fold in a one-shot job). Both arms
-      * are row-identical by construction; c06 gates the served arm
-      * against the from-scratch oracle, CompactionSpec pins arm
-      * equality and the policy edges directly. */
-    def maintained(s: SparkSession, d: String): DataFrame = {
-      val segmented = ensure(s, d, SliceRems.size)
-      if (foldDue(d)) s.read.parquet(s"${ensureFolded(s, d)}/pairs")
-      else segmented
-    }
-  }
-
-  /** The multi-night SOAK ring (r16 VERDICT slate #1) — every lifecycle
-    * arm is individually hash-gated (c04 grow, c05 promote, c06 fold,
-    * c07 retract), but none of those can see state corruption that only
-    * appears after CHAINED maintenance: promote → fold → retract →
-    * promote over one corpus, each night building on the previous
-    * night's PUBLISHED artifact. This ring simulates five nights:
+  /** The multi-night SOAK ring — every lifecycle arm is individually
+    * hash-gated (c04 grow, c05 promote, c06 fold, c07 retract), but none
+    * of those can see state corruption that only appears after CHAINED
+    * maintenance over one corpus:
     *
-    *  - night 0: from-scratch LSH build over the original resident
-    *    corpus (slices 3, 7 and 1 not yet arrived) — published;
-    *  - night 1: slice doc_id%10==3 arrives — band-delta GROW, the
-    *    segment published (PROMOTE);
-    *  - night 2: slice doc_id%10==7 arrives — grow + promote, then the
-    *    ratio-gated segment-tail FOLD (the c06 policy over the soak's
-    *    own segments) decides the served layout;
-    *  - night 3: a tombstone batch (doc_id%17==3 — deliberately
-    *    UNALIGNED with the slices, straddling resident and delta
-    *    segments AND the folded layout) is RETRACTED and the reduced
-    *    state published as the new resident (the physical-reclamation
-    *    fold [[retractPairs]]'s doc promises);
-    *  - night 4: a late slice (doc_id%10==1, minus its tombstoned
-    *    members) arrives and GROWS the post-retraction state — the
-    *    composition direction nothing else exercises: a delta append
-    *    on top of a retraction.
+    *  - night 0: from-scratch build (slices 3, 7 and 1 not yet arrived);
+    *  - nights 1-2: slices 3 and 7 GROW the state; night 2 then FOLDS
+    *    when the ratio policy says so;
+    *  - night 3: a tombstone batch (doc_id % 17 == 3 — deliberately
+    *    UNALIGNED with the slices, straddling resident, delta and folded
+    *    layouts) is RETRACTED and the reduced state published as the
+    *    new resident;
+    *  - night 4: a late slice (doc_id % 10 == 1, minus its tombstoned
+    *    members) GROWS the post-retraction state — a delta append on top
+    *    of a retraction, where a resurrected pair would surface.
     *
-    * The c08 gate hash-checks, for EVERY night, the served pair set
-    * AND the keep-mask probe of that night's arriving batch (night 3
-    * re-probes yesterday's slice over the retracted state — the
-    * reinstatement direction) against a from-scratch DuckDB derivation
-    * restricted to the docs present that night. A pair leaked across a
-    * promotion, resurrected by the late grow after its endpoint was
-    * tombstoned, dropped by the fold, or a keep verdict computed
-    * against the wrong state all break the hash AT THE NIGHT WHERE
-    * THEY HAPPEN.
-    *
-    * Scale: each night keeps its member's cost shape — night 0 is the
-    * only corpus-proportional build; grows are O(slice × bands) band
-    * probes against the persisted [[BandIndex]]; the fold and the
-    * retraction are ∝ pair-set bytes; publication is the atomic
-    * rename+marker every index rides ([[IndexStore]]). The N-night
-    * cost curve is measured at 125k docs in the `soak` scale
-    * run (PLANS.md r17). Reference anchor: the daily cron shape,
-    * `README.md:9`, `tabjolt_email.py:345-394`. */
-  object SoakRing {
-    /** Grow slices in arrival order (nights 1..2). */
-    private[graft] val GrowRems: Seq[Int] = Seq(3, 7)
-    /** The post-retraction late slice (night 4). */
-    private[graft] val LateRem = 1
-    /** Tombstone batch (night 3) — unaligned with the 10-modulus slices. */
-    private[graft] val TombMod = 17
-    private[graft] val TombRem = 3
-
-    /** Docs present at the END of `night` (the corpus the served state
-      * must equal a from-scratch build of). */
-    private[graft] def presentAt(night: Int): Column = {
-      val missing =
-        if (night <= 2) GrowRems.drop(night) :+ LateRem
-        else if (night == 3) Seq(LateRem)
-        else Seq.empty[Int]
-      val slices = missing.foldLeft(lit(true))(
-        (acc, r) => acc && col("doc_id") % 10 =!= r)
-      if (night >= 3) slices && col("doc_id") % TombMod =!= TombRem
-      else slices
-    }
-
-    /** The identical condition as SQL over column `c` — the oracle's
-      * per-night present set, generated from the SAME schedule
-      * constants so the two sides cannot drift. */
-    private[graft] def presentSql(night: Int, c: String): String = {
-      val missing =
-        if (night <= 2) GrowRems.drop(night) :+ LateRem
-        else if (night == 3) Seq(LateRem)
-        else Seq.empty[Int]
-      val parts = missing.map(r => s"$c % 10 <> $r") ++
-        (if (night >= 3) Seq(s"$c % $TombMod <> $TombRem") else Nil)
-      if (parts.isEmpty) "TRUE" else parts.mkString(" AND ")
-    }
-
-    /** The probe batch of `night` as a (Column predicate, SQL) pair —
-      * the slice that just arrived; night 3 re-probes yesterday's slice
-      * over the retracted state (reinstatement). */
-    private[graft] def batchPred(night: Int): Column = night match {
-      case 1 => col("doc_id") % 10 === GrowRems(0)
-      case 2 => col("doc_id") % 10 === GrowRems(1)
-      case 3 => col("doc_id") % 10 === GrowRems(1) &&
-        col("doc_id") % TombMod =!= TombRem
-      case 4 => col("doc_id") % 10 === LateRem &&
-        col("doc_id") % TombMod =!= TombRem
-    }
-    private[graft] def batchSql(night: Int, c: String): String = night match {
-      case 1 => s"$c % 10 = ${GrowRems(0)}"
-      case 2 => s"$c % 10 = ${GrowRems(1)}"
-      case 3 => s"$c % 10 = ${GrowRems(1)} AND $c % $TombMod <> $TombRem"
-      case 4 => s"$c % 10 = $LateRem AND $c % $TombMod <> $TombRem"
-    }
-
-    // _l1: layout-version salt, the BandIndex convention
-    private def dirFor(d: String, tag: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_soak_l1_${IndexStore.corpusFingerprint(d, "documents")}_$tag"
-
-    /** Night 0's build / nights 1-2's delta segments — publish-once. */
-    private def ensureSegment(s: SparkSession, d: String, night: Int): String =
-      IndexStore.ensure(dirFor(d, s"n$night"), "pairs/_SUCCESS") { tmp =>
-        val seg =
-          if (night == 0)
-            lshPairsFromBands(docs(s, d).filter(presentAt(0)),
-              corpusBands(s, d).filter(presentAt(0)), setsBytesFor(d))
-          else {
-            val bands = corpusBands(s, d).filter(presentAt(night))
-            bandDelta(docs(s, d).filter(presentAt(night)), bands,
-              bands.filter(col("doc_id") % 10 === GrowRems(night - 1)),
-              setsBytesFor(d), avgDocBytesFor(d))
-          }
-        seg.publishTo(s"$tmp/pairs")
-      }
-
-    private def segUnion(s: SparkSession, d: String, night: Int): DataFrame =
-      (0 to night).map(k => s.read.parquet(s"${ensureSegment(s, d, k)}/pairs"))
-        .reduce(_ unionByName _)
-
-    /** Night 2's fold policy — the ONE [[pairFoldDue]] calculus over
-      * the soak's own segment dirs (shared body with the promotion
-      * ring and, via CompactRatio, the vector ring). */
-    private[graft] def foldDue(d: String): Boolean =
-      pairFoldDue(s"${dirFor(d, "n0")}/pairs",
-        (1 to GrowRems.size).map(k => s"${dirFor(d, s"n$k")}/pairs"))
-
-    private def ensureFolded(s: SparkSession, d: String): String =
-      IndexStore.ensure(dirFor(d, "fold2"), "pairs/_SUCCESS") { tmp =>
-        writeFoldedPairs(segUnion(s, d, GrowRems.size), s"$tmp/pairs")
-      }
-
-    /** Night 3: tombstones retracted from night 2's SERVED layout
-      * (folded or segmented — row-identical either way) and the reduced
-      * state published as the new resident. */
-    private def ensureRetracted(s: SparkSession, d: String): String =
-      IndexStore.ensure(dirFor(d, "n3"), "pairs/_SUCCESS") { tmp =>
-        val tombs = docs(s, d)
-          .filter(col("doc_id") % TombMod === TombRem).select(col("doc_id"))
-        retractPairs(served(s, d, 2), tombs)
-          .publishTo(s"$tmp/pairs")
-      }
-
-    /** Night 4: the late slice grows the POST-RETRACTION state — fresh
-      * bands exclude tombstoned members via presentAt(4), so a
-      * retracted doc's pairs can never be resurrected by the grow. */
-    private def ensureLateSegment(s: SparkSession, d: String): String =
-      IndexStore.ensure(dirFor(d, "n4"), "pairs/_SUCCESS") { tmp =>
-        val bands = corpusBands(s, d).filter(presentAt(4))
-        bandDelta(docs(s, d).filter(presentAt(4)), bands,
-          bands.filter(col("doc_id") % 10 === LateRem),
-          setsBytesFor(d), avgDocBytesFor(d))
-          .publishTo(s"$tmp/pairs")
-      }
-
-    /** The SERVED pair state at the end of `night`, chained through the
-      * published artifacts (night k+1 reads night k's publication,
-      * never a recompute). Unordered — consumers sort. */
-    def served(s: SparkSession, d: String, night: Int): DataFrame = night match {
-      case n if n >= 0 && n <= 1 => segUnion(s, d, n)
-      case 2 =>
-        val segmented = segUnion(s, d, 2)
-        if (foldDue(d)) s.read.parquet(s"${ensureFolded(s, d)}/pairs")
-        else segmented
-      case 3 => s.read.parquet(s"${ensureRetracted(s, d)}/pairs")
-      case 4 => s.read.parquet(s"${ensureRetracted(s, d)}/pairs")
-        .unionByName(s.read.parquet(s"${ensureLateSegment(s, d)}/pairs"))
-      case n => sys.error(s"soak ring has 5 nights (0-4); got $n")
-    }
-  }
+    * The c08 gate hash-checks, for EVERY night, the served pair set AND
+    * the keep-mask probe of that night's batch against a from-scratch
+    * DuckDB derivation over that night's present set, both generated
+    * from this one schedule. The N-night cost curve at 125k docs is the
+    * `soak` scale run (PLANS.md r17). */
+  private[graft] val SoakRing: Ring = pairRing("soak",
+    Ring.Grow(3), Ring.Grow(7), Ring.Fold, Ring.Retract(17, 3), Ring.Grow(1))
 
   val t34 = QueryDef(
     "t34_pair_index_delta",

@@ -107,25 +107,26 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("pair-ring fold: policy trips on the fixture, folded layout row-identical, served once due") {
-    import TextDedup.PromotedPairIndex
-    val nights = PromotedPairIndex.SliceRems.size
-    val segmented = PromotedPairIndex.ensure(spark, sf, nights)
+    val ring = TextDedup.PromotedPairIndex
+    val nights = ring.schedule.nights
+    assert(ring.schedule.foldsAt(nights), "the promotion ring folds after its last night")
+    val segmented = ring.segmented(spark, sf, nights)
     // the c06 premise: the fixture's two delta segments clear the ratio
-    assert(PromotedPairIndex.foldDue(sf),
+    assert(ring.foldDue(sf, nights),
       "fixture delta tail must trip the fold ratio — c06 would gate the union arm")
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("doc1", "doc2", "jaccard").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    val foldedDir = PromotedPairIndex.ensureFolded(spark, sf)
+    val foldedDir = ring.ensureFolded(spark, sf, nights)
     val folded = spark.read.parquet(s"$foldedDir/pairs")
     assert(pairSet(folded) == pairSet(segmented),
       "fold changed the pair set — it must copy rows, never recompute")
     // the maintained view serves the folded physical layout once due
-    val served = PromotedPairIndex.maintained(spark, sf)
+    val served = ring.maintained(spark, sf)
     assert(served.inputFiles.nonEmpty &&
-      served.inputFiles.forall(_.contains("graft_pairs_ring_f1")),
+      served.inputFiles.forall(_.contains(ring.foldDir(sf, nights))),
       "maintained must serve the folded segment once the ratio trips")
     // a degraded listing is never due — fold stays an optimization
-    assert(!PromotedPairIndex.foldDue("/nonexistent/corpus"))
+    assert(!ring.foldDue("/nonexistent/corpus", nights))
   }
 }

@@ -52,13 +52,14 @@ class PairIndexDeltaSpec extends SparkSpec {
   test("promotion ring: every promoted state == from-scratch rebuild of its present set") {
     import org.apache.spark.sql.functions.col
     val full = pairs(TextDedup.PairIndex.ensure(spark, sf).orderBy(col("doc1")))
-    val rems = TextDedup.PromotedPairIndex.SliceRems
+    val rems = Seq(3, 7) // the ring's slices, in arrival order
+    assert(TextDedup.PromotedPairIndex.schedule.nights == rems.size)
     def presentPair(night: Int)(p: (Long, Long)): Boolean =
       rems.drop(night).forall(r => p._1 % 10 != r && p._2 % 10 != r)
     var prevKeys = Set.empty[(Long, Long)]
     (0 to rems.size).foreach { k =>
       val state = pairs(
-        TextDedup.PromotedPairIndex.ensure(spark, sf, k).orderBy(col("doc1")))
+        TextDedup.PromotedPairIndex.segmented(spark, sf, k).orderBy(col("doc1")))
       val expected = full.view.filterKeys(presentPair(k)).toMap
       assert(state == expected,
         s"night $k: missing=${expected.keySet -- state.keySet} " +
@@ -84,12 +85,12 @@ class PairIndexDeltaSpec extends SparkSpec {
     spark.read.parquet(s"$sf/documents.parquet")
       .write.mode("overwrite").parquet(s"$scratch/documents.parquet")
     val d = scratch.getAbsolutePath
-    TextDedup.PromotedPairIndex.ensure(spark, d, 0)
-    val dir0 = TextDedup.PromotedPairIndex.stateDirFor(d, 0)
+    TextDedup.PromotedPairIndex.segmented(spark, d, 0)
+    val dir0 = TextDedup.PromotedPairIndex.segmentDir(d, 0)
     val sentinel = spark.range(1)
       .select(lit(-1L).as("doc1"), lit(-2L).as("doc2"), lit(0.99).as("jaccard"))
     sentinel.write.mode("overwrite").parquet(s"$dir0/pairs")
-    val night1 = TextDedup.PromotedPairIndex.ensure(spark, d, 1)
+    val night1 = TextDedup.PromotedPairIndex.segmented(spark, d, 1)
       .filter(col("doc1") === -1L).count()
     assert(night1 == 1, "night 1 did not read the promoted night-0 state")
   }
@@ -97,7 +98,7 @@ class PairIndexDeltaSpec extends SparkSpec {
   test("resident index ∪ delta == the full published index (c04's append)") {
     val full = pairs(TextDedup.PairIndex.ensure(spark, sf)
       .orderBy(org.apache.spark.sql.functions.col("doc1")))
-    val resident = pairs(TextDedup.ResidentPairIndex.ensure(spark, sf)
+    val resident = pairs(TextDedup.DailyPairIndex.segment(spark, sf, 0)
       .orderBy(org.apache.spark.sql.functions.col("doc1")))
     val delta = pairs(TextDedup.t34.fn(spark, sf))
     assert(resident.keySet.intersect(delta.keySet).isEmpty,

@@ -43,7 +43,7 @@ class RingSoakSpec extends SparkSpec {
 
   private def keepMap(night: Int): Map[Long, Boolean] = {
     val batch = graft.Tables.documents(spark, dir)
-      .filter(TextDedup.SoakRing.batchPred(night)).select(col("doc_id"))
+      .filter(TextDedup.SoakRing.schedule.batchPred(night)).select(col("doc_id"))
     TextDedup.dedupKeepMask(TextDedup.SoakRing.served(spark, dir, night), batch)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
   }
@@ -84,7 +84,7 @@ class RingSoakSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir)
     (0 to 4).foreach { k =>
       val scratch = TextDedup.dedupNearPairs(
-          docs.filter(TextDedup.SoakRing.presentAt(k)), "doc_id", "text")
+          docs.filter(TextDedup.SoakRing.schedule.presentAt(k)), "doc_id", "text")
         .select(col("doc1"), col("doc2")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pairSet(k) == scratch, s"night $k served state drifted from scratch build")
@@ -96,7 +96,7 @@ class RingSoakSpec extends SparkSpec {
     // pins that the ratio policy actually trips on the gate fixture, so
     // c08 genuinely serves the folded layout there
     TextDedup.SoakRing.served(spark, "/root/testdata/sf0.001", 2).count()
-    assert(TextDedup.SoakRing.foldDue("/root/testdata/sf0.001"),
+    assert(TextDedup.SoakRing.foldDue("/root/testdata/sf0.001", 2),
       "fixture delta tail no longer trips the fold ratio — c08 would silently stop testing the folded arm")
   }
 }

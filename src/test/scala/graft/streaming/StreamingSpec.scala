@@ -271,14 +271,14 @@ class StreamingSpec extends SparkSpec {
     }
     // run 1 under the night-1 promotion (resident + slice 3: no pair
     // has a slice-7 endpoint yet, so the whole batch is admitted)
-    val r1 = drain(TextDedup.PromotedPairIndex.ensure(spark, root, 1))
+    val r1 = drain(TextDedup.PromotedPairIndex.segmented(spark, root, 1))
     assert(r1 == Seq(7L, 17L), s"run 1 admitted $r1")
     // between runs: new files arrive AND the nightly promotion lands
     docRows(Seq(27L -> dupX, 37L -> uniq(37L)))
       .coalesce(1).write.mode("append").parquet(docDir)
     // (the corpus listing changed, so the ring rebuilds under the new
     // fingerprint — the nightly shape; night 2 pairs the full corpus)
-    val r2 = drain(TextDedup.PromotedPairIndex.ensure(spark, root, 2))
+    val r2 = drain(TextDedup.PromotedPairIndex.segmented(spark, root, 2))
     // (a) exactly-once: 7/17 present exactly once — not re-read, not
     //     retroactively re-filtered even though the NEW verdict
     //     dominates doc 7; (b) the new file filtered under the new
@@ -557,7 +557,7 @@ class StreamingSpec extends SparkSpec {
       // st11's admission body: in-stream kernel, radius-2 keeper join —
       // the verdict (static side) resolves here, at stream definition
       val keepers = Multimodal.MediaIndex.nearDupKeepers(
-        Multimodal.MediaIndex.maintained(spark, root))
+        Multimodal.MediaIndex.ring.maintained(spark, root))
       val arriving = spark.readStream.schema(schema).parquet(docDir)
         .filter(col("doc_id") % 10 === Multimodal.MediaIndex.NewSliceRem)
       val q = Multimodal.phashFrameOver(spark, arriving)
