@@ -19,21 +19,42 @@ import org.apache.spark.sql.types.StructType
   * reject at load time — the numeric screening happens in the queries'
   * regexp guards, exactly as the reference's SQL does it.
   *
-  * Scale: the read is a plain distributed file scan; the rejected sink is
-  * an ordinary partitioned text write (no collect). `skipHeader` mirrors
-  * the loader's SKIP 1 option (tabjolt_email.py:35) — note the reference
+  * Scale: one plain, uncompressed file on a seekable file system is read
+  * in `Fanout.widthForBytes` byte ranges, one task each ([[SplitRead]]).
+  * `multiLine` parsing cannot be split by Spark itself, because a quoted
+  * field may span lines; each range is therefore parsed by the very call
+  * the multiLine reader makes per file and accepted only when its end is
+  * proven to fall between records (the stitch check). A cut that falls
+  * inside a record is re-cut locally and only the pieces around it are
+  * parsed again, so the rows, their order and every `_rejected` string
+  * equal a one-task read. The one-task read stays for the inputs the
+  * split does not take (a directory or glob, a compressed file, a header
+  * to skip, a file under two ranges, a file system that cannot seek) and
+  * as the last resort when a range meets a `'\r'`, a byte-order mark at
+  * its start or a parse error. The rejected sink is an ordinary
+  * partitioned text write (no collect). `skipHeader` mirrors the
+  * loader's SKIP 1 option (tabjolt_email.py:35) — note the reference
   * always passes skip_header=False in production (tabjolt_email.py:370).
   */
 object Ingest {
+
+  /** How a load was parsed: `ranges` byte ranges (1 for the one-task
+    * read), `recuts` pieces re-parsed because a cut fell inside a record,
+    * and `fallbacks` 1 when a split read was given up for the one-task
+    * read. */
+  final case class Split(ranges: Int, recuts: Int, fallbacks: Int)
+  val OneTask: Split = Split(1, 0, 0)
 
   /** `parsed` is cached: Spark disallows queries whose only referenced
     * column from a raw CSV is the corrupt-record column (SPARK-38523) —
     * and that includes pruned plans like `good.count()`, whose sole
     * reference is the corrupt-null filter. The cache must therefore live
     * as long as EITHER frame is queried; call [[LoadResult.cleanup]] when
-    * done with both, or the cache pins the table for the session. */
+    * done with both, or the cache pins the table for the session. On the
+    * byte-range path the cache is already built (one partition per range)
+    * and serves every query. */
   final case class LoadResult(good: DataFrame, rejected: DataFrame,
-                              private val parsed: DataFrame) {
+                              private[tabjolt] val parsed: DataFrame, split: Split = OneTask) {
     def rejectedCount: Long = rejected.count()
     def cleanup(): Unit = parsed.unpersist()
   }
@@ -50,34 +71,54 @@ object Ingest {
     LoadResult(good, rejected, good) // unpersist on a non-cached frame is a no-op
   }
 
-  /** Raw schema'd delimited read; rows that fail parse land in
-    * [[Schemas.Rejected]]. */
+  /** The reader options of every load; the split read builds its
+    * `CSVOptions` from the same map. */
+  private def options(delimiter: String, skipHeader: Boolean): Map[String, String] = Map(
+    "delimiter" -> delimiter,
+    "header" -> skipHeader.toString,
+    "multiLine" -> "true",
+    "mode" -> "PERMISSIVE",
+    "columnNameOfCorruptRecord" -> Schemas.Rejected)
+
+  /** Raw schema'd delimited read in one task per file; rows that fail
+    * parse land in [[Schemas.Rejected]]. */
   def read(spark: SparkSession, path: String, schema: StructType,
-           delimiter: String, skipHeader: Boolean = false): DataFrame = {
-    val df = spark.read
-      .schema(schema)
-      .option("delimiter", delimiter)
-      .option("header", skipHeader)
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", Schemas.Rejected)
-      .csv(path)
-    // A corrupt-record column can't be filtered straight off the reader
-    // (SPARK-38523) — materialize the parse first.
-    df
-  }
+           delimiter: String, skipHeader: Boolean = false): DataFrame =
+    spark.read.schema(schema).options(options(delimiter, skipHeader)).csv(path)
 
   /** Split a schema'd read into good rows (parse columns only) and
-    * rejected raw lines. */
+    * rejected raw lines. A file the split read takes is parsed (and
+    * cached) here, in byte ranges; any other input is cached lazily by
+    * the first query. */
   def load(spark: SparkSession, path: String, schema: StructType,
-           delimiter: String, skipHeader: Boolean = false): LoadResult = {
-    val parsed = read(spark, path, schema, delimiter, skipHeader).cache()
-    val good = parsed.filter(col(Schemas.Rejected).isNull)
-      .drop(Schemas.Rejected)
-    val rejected = parsed.filter(col(Schemas.Rejected).isNotNull)
-      .select(col(Schemas.Rejected))
-    LoadResult(good, rejected, parsed)
-  }
+           delimiter: String, skipHeader: Boolean = false): LoadResult =
+    SplitRead.plan(spark, path, schema, delimiter, skipHeader) match {
+      case Some((file, len, cuts)) => loadWithCuts(spark, file, len, schema, delimiter, cuts)
+      case None => loadOneTask(spark, path, schema, delimiter, skipHeader)
+    }
+
+  /** The one-task read, cached lazily by the first query. */
+  private[tabjolt] def loadOneTask(spark: SparkSession, path: String, schema: StructType,
+                                   delimiter: String, skipHeader: Boolean = false,
+                                   split: Split = OneTask): LoadResult =
+    result(read(spark, path, schema, delimiter, skipHeader).cache(), split)
+
+  /** The split read at explicit `cuts` (byte offsets, each just after a
+    * `'\n'`) of the plain file `path` of `len` bytes; the one-task read
+    * when the split is given up. */
+  private[tabjolt] def loadWithCuts(spark: SparkSession, path: String, len: Long,
+                                    schema: StructType, delimiter: String,
+                                    cuts: Seq[Long]): LoadResult =
+    SplitRead.read(spark, path, len, schema, options(delimiter, skipHeader = false), cuts) match {
+      case Some((parsed, split)) => result(parsed, split)
+      case None => loadOneTask(spark, path, schema, delimiter, split = Split(1, 0, 1))
+    }
+
+  private def result(parsed: DataFrame, split: Split): LoadResult =
+    LoadResult(
+      parsed.filter(col(Schemas.Rejected).isNull).drop(Schemas.Rejected),
+      parsed.filter(col(Schemas.Rejected).isNotNull).select(col(Schemas.Rejected)),
+      parsed, split)
 
   /** Full COPY-equivalent: rejected raw rows appended to the side file
     * (the `rejected.txt` analog), the LoadResult returned so the caller

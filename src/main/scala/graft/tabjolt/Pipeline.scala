@@ -147,24 +147,44 @@ object Pipeline {
     def cleanup(): Unit = loads.foreach(_.cleanup())
   }
 
-  /** Loads the four source tables. A source that fails to resolve (file
-    * deleted, fetch failed) logs and yields an EMPTY table rather than
-    * aborting the run — the reference skips missing files and reports on
-    * whatever loaded (tabjolt_email.py:371-375). */
+  /** Loads the four source tables and appends their rejected rows to the
+    * side sink in ONE write (one job and one commit, not four). A source
+    * that fails to resolve (file deleted, fetch failed) logs and yields an
+    * EMPTY table rather than aborting the run — the reference skips
+    * missing files and reports on whatever loaded
+    * (tabjolt_email.py:371-375). A failed sink write releases every parse
+    * cache and substitutes an empty table for every source, as a failed
+    * load does. */
   def ingest(spark: SparkSession, cfg: PipelineConfig): TabjoltTables = {
-    def one(path: String, schema: org.apache.spark.sql.types.StructType,
-            delim: String): Ingest.LoadResult =
-      try Ingest.loadWithRejectedSink(spark, path, schema, delim, cfg.rejectedPath)
+    val sources = Seq(
+      (cfg.summaryLinePath, Schemas.summaryLine, ","),
+      (cfg.winCounterPath, Schemas.winCounter, "\t"),
+      (cfg.performanceSamplesPath, Schemas.performanceSamples, ","),
+      (cfg.threadDetailsPath, Schemas.threadDetails, "\t"))
+    def notLoaded(path: String, e: Throwable): Unit =
+      System.err.println(s"[graft.Pipeline] source not loaded: $path ($e)")
+    val loads = sources.map { case (path, schema, delim) =>
+      try Ingest.load(spark, path, schema, delim)
       catch {
         case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft.Pipeline] source not loaded: $path ($e)")
+          notLoaded(path, e)
           Ingest.emptyLoad(spark, schema)
       }
-    val sl = one(cfg.summaryLinePath, Schemas.summaryLine, ",")
-    val wc = one(cfg.winCounterPath, Schemas.winCounter, "\t")
-    val ps = one(cfg.performanceSamplesPath, Schemas.performanceSamples, ",")
-    val td = one(cfg.threadDetailsPath, Schemas.threadDetails, "\t")
-    TabjoltTables(sl.good, wc.good, ps.good, td.good, Seq(sl, wc, ps, td))
+    }
+    val kept =
+      try {
+        loads.map(_.rejected).reduce(_ union _).write.mode("append").text(cfg.rejectedPath)
+        loads
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          loads.foreach(_.cleanup())
+          sources.map { case (path, schema, _) =>
+            notLoaded(path, e)
+            Ingest.emptyLoad(spark, schema)
+          }
+      }
+    val Seq(sl, wc, ps, td) = kept
+    TabjoltTables(sl.good, wc.good, ps.good, td.good, kept)
   }
 
   /** Runs the full daily pipeline against the sink the config names —

@@ -152,4 +152,59 @@ class ReportSpec extends SparkSpec {
     assert(sink.sent.head.imageMime == "image/png")
     assert(sink.sent.head.render.contains("Content-Type: image/png"))
   }
+
+  /** Small fixtures for three sources, `samples` for the JTL, and the
+    * rejected sink at `rejected`. */
+  private def withSamples(samples: String, rejected: String): PipelineConfig = {
+    import java.nio.file.Files
+    def write(name: String, content: String): String = {
+      val f = Files.createTempFile(name, ".txt"); Files.writeString(f, content); f.toString
+    }
+    PipelineConfig(
+      summaryLinePath = write("summary", "Avg,12661,2024-07-30\n"),
+      winCounterPath = write("wincounter", "1722333527860\tH\tMemory\tc\t\t0\t2024-07-30 15:30:13\n"),
+      performanceSamplesPath = samples,
+      threadDetailsPath = write("threads", "#1\tThreads: 5/5\tSamples: 1\tLatency: 10\tResp.Time: 100\tErrors: 0\n"),
+      rejectedPath = rejected)
+  }
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("an unwritable rejected sink yields the empty tables and the email, and leaks no cache") {
+    import java.nio.file.Files
+    val (jtl, _) = JtlFixture.write(spark)
+    val blocker = Files.createTempFile("graft-not-a-dir", ".txt") // the sink dir cannot be made under a file
+    val cfg = withSamples(jtl.toString, blocker.toString + "/rejected")
+    val before = persisted
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val t = try Pipeline.ingest(spark, cfg) finally System.setErr(stderr)
+    assert(err.toString.split("\n").count(_.contains("source not loaded")) == 4)
+    assert(Seq(t.summaryLine, t.winCounter, t.performanceSamples, t.threadDetails).forall(_.isEmpty))
+    assert(persisted == before, "a failed sink write must release every parse cache")
+    t.cleanup()
+    assert(persisted == before)
+    val sink = new CaptureEmailSink
+    val html = Pipeline.runDaily(spark, cfg, LocalDate.of(2024, 7, 30), sink)
+    assert(sink.sent.size == 1, "the report must send with every source empty")
+    assert(html.contains("No results found"))
+    assert(persisted == before)
+  }
+
+  test("cleanup() releases the ingest caches on the split path and on the one-task fallback") {
+    import java.nio.file.Files
+    for ((eol, fallback) <- Seq(("\n", false), ("\r\n", true))) {
+      val (jtl, nominal) = JtlFixture.write(spark, eol)
+      val before = persisted
+      val t = Pipeline.ingest(spark,
+        withSamples(jtl.toString, Files.createTempDirectory("rej").toString + "/rejected"))
+      assert(t.loads(2).split ==
+        (if (fallback) Ingest.Split(1, 0, 1) else Ingest.Split(nominal.size + 1, 0, 0)))
+      assert(t.performanceSamples.count() == 12500 + 1) // the samples and the header row
+      assert(persisted != before)
+      t.cleanup()
+      assert(persisted == before, s"caches left after cleanup() (line end ${eol.length} bytes)")
+    }
+  }
 }
