@@ -24,26 +24,23 @@ import org.apache.spark.sql.types.StructType
   * `multiLine` parsing cannot be split by Spark itself, because a quoted
   * field may span lines; each range is therefore parsed by the very call
   * the multiLine reader makes per file and accepted only when its end is
-  * proven to fall between records (the stitch check). A cut that falls
-  * inside a record is re-cut locally and only the pieces around it are
-  * parsed again, so the rows, their order and every `_rejected` string
-  * equal a one-task read. The one-task read stays for the inputs the
-  * split does not take (a directory or glob, a compressed file, a header
-  * to skip, a file under two ranges, a file system that cannot seek) and
-  * as the last resort when a range meets a `'\r'`, a byte-order mark at
-  * its start or a parse error. The rejected sink is an ordinary
-  * partitioned text write (no collect). `skipHeader` mirrors the
+  * proven to fall between records (the stitch check), so the rows, their
+  * order and every `_rejected` string equal a one-task read. A range that
+  * is not stitched gives the whole file to the one-task read, as does a
+  * range that meets a `'\r'`, a byte-order mark at its start or a parse
+  * error. The one-task read also takes the inputs the split does not (a
+  * directory or glob, a compressed file, a header to skip, a file under
+  * two ranges, a file system that cannot seek). `skipHeader` mirrors the
   * loader's SKIP 1 option (tabjolt_email.py:35) — note the reference
   * always passes skip_header=False in production (tabjolt_email.py:370).
   */
 object Ingest {
 
   /** How a load was parsed: `ranges` byte ranges (1 for the one-task
-    * read), `recuts` pieces re-parsed because a cut fell inside a record,
-    * and `fallbacks` 1 when a split read was given up for the one-task
-    * read. */
-  final case class Split(ranges: Int, recuts: Int, fallbacks: Int)
-  val OneTask: Split = Split(1, 0, 0)
+    * read), and `fallbacks` 1 when a split read was given up for the
+    * one-task read. */
+  final case class Split(ranges: Int, fallbacks: Int)
+  val OneTask: Split = Split(1, 0)
 
   /** `parsed` is cached: Spark disallows queries whose only referenced
     * column from a raw CSV is the corrupt-record column (SPARK-38523) —
@@ -111,7 +108,7 @@ object Ingest {
                                     cuts: Seq[Long]): LoadResult =
     SplitRead.read(spark, path, len, schema, options(delimiter, skipHeader = false), cuts) match {
       case Some((parsed, split)) => result(parsed, split)
-      case None => loadOneTask(spark, path, schema, delimiter, split = Split(1, 0, 1))
+      case None => loadOneTask(spark, path, schema, delimiter, split = Split(1, 1))
     }
 
   private def result(parsed: DataFrame, split: Split): LoadResult =
@@ -119,21 +116,4 @@ object Ingest {
       parsed.filter(col(Schemas.Rejected).isNull).drop(Schemas.Rejected),
       parsed.filter(col(Schemas.Rejected).isNotNull).select(col(Schemas.Rejected)),
       parsed, split)
-
-  /** Full COPY-equivalent: rejected raw rows appended to the side file
-    * (the `rejected.txt` analog), the LoadResult returned so the caller
-    * can query `good` and release the cache via cleanup() when done. */
-  def loadWithRejectedSink(spark: SparkSession, path: String,
-                           schema: StructType, delimiter: String,
-                           rejectedPath: String,
-                           skipHeader: Boolean = false): LoadResult = {
-    val r = load(spark, path, schema, delimiter, skipHeader)
-    // A sink failure (e.g. unwritable rejectedPath) must not orphan the
-    // parse cache: callers that catch-and-substitute an empty load never
-    // see this LoadResult, so its cleanup handle would be lost for the
-    // session. Release before rethrowing.
-    try r.rejected.write.mode("append").text(rejectedPath)
-    catch { case e: Throwable => r.cleanup(); throw e }
-    r
-  }
 }

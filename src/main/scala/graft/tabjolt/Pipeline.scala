@@ -133,10 +133,11 @@ object Fetch {
   * (rejected rows to the side sink), run the nine queries, render the
   * trend chart + HTML report, hand to the email sink.
   *
-  * The S3 download step (tabjolt_email.py:351-359) has no separate
-  * analog: Spark reads `s3a://` URIs in the *Path fields directly when a
-  * Hadoop S3 filesystem is on the classpath — pulling objects to local
-  * disk first would serialize the whole load through the driver.
+  * The S3 download step (tabjolt_email.py:351-359) is [[Fetch]]: the
+  * config's `fetch` pairs are staged first, and a failed fetch is logged
+  * and skipped, so the run reports on whatever staged. The *Path fields
+  * may also name `s3a://` URIs, which Spark reads directly when a Hadoop
+  * S3 filesystem is on the classpath.
   */
 object Pipeline {
 
@@ -148,7 +149,8 @@ object Pipeline {
   }
 
   /** Loads the four source tables and appends their rejected rows to the
-    * side sink in ONE write (one job and one commit, not four). A source
+    * side sink in ONE write (one job and one commit, not four): an
+    * ordinary partitioned text write, with no collect. A source
     * that fails to resolve (file deleted, fetch failed) logs and yields an
     * EMPTY table rather than aborting the run — the reference skips
     * missing files and reports on whatever loaded

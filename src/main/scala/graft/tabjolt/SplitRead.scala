@@ -7,7 +7,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.TaskContext
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, GraftBridge, GraftCsv, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.CSVOptions
@@ -26,15 +25,8 @@ import org.apache.spark.sql.types.StructType
   * (never a thrown task failure, which a cluster would retry). From
   * offset 0, a range that starts on a record boundary and is stitched
   * ends on one, so its rows are exactly the one-task read's rows there.
-  *
-  * A range that is not stitched is re-cut locally. Its rows before its
-  * last record are still exact, and the parser's line count says where
-  * that record began. The piece from there to a record end reported by
-  * the next range's parse is re-parsed, stitch-checked in the same way,
-  * and the next range's rows after that record are kept. A piece that
-  * fails again reaches twice as far on the next try, and the piece that
-  * reaches the end of the file needs no check. Only the re-cut pieces
-  * are parsed again; the rest is copied from the first parse's cache.
+  * A range that is not stitched gives the whole file to the one-task
+  * read.
   *
   * Exactness (speculative parsing with validation, after Ge et al.,
   * "Speculative Distributed CSV Data Parsing for Big Data Analytics",
@@ -45,10 +37,6 @@ private[tabjolt] object SplitRead {
   /** The line appended to every range but the last. */
   val Sentinel = "graftstitchsentinel"
 
-  /** Record ends reported per parse (the candidates a re-cut can end on). */
-  private val Heads = 8
-  /** Re-cut rounds before the one-task read takes over. */
-  private val MaxRounds = 32
   /** Bytes read after each nominal cut while looking for a record start. */
   private val CutWindow = 64 * 1024
 
@@ -56,13 +44,10 @@ private[tabjolt] object SplitRead {
     * appended unless `end` is the file's length. */
   final case class Seg(start: Long, end: Long)
 
-  /** What one parse of a [[Seg]] reported: its row count (sentinel
-    * dropped), whether it was stitched, the byte offsets right after its
-    * first [[Heads]] records, where its last record began, and a reason
-    * to abandon the split read altogether (`'\r'`, a byte-order mark at
-    * the range start, a parse error). */
-  final case class Verdict(rows: Int, stitched: Boolean, heads: Vector[Long],
-                           lastStart: Long, abandon: Option[String])
+  /** What one parse of a [[Seg]] reported: whether it was stitched, and
+    * a reason to abandon the split read (`'\r'`, a byte-order mark at the
+    * range start, a parse error). */
+  final case class Verdict(stitched: Boolean, abandon: Option[String])
 
   /** The file's length and the cuts `Fanout.widthForBytes` sizing picks,
     * or None for an input the split read does not take: a glob or a
@@ -141,8 +126,9 @@ private[tabjolt] object SplitRead {
   }
 
   /** Parses `path` (qualified, `len` bytes) cut at `cuts` and returns the
-    * cached rows with the split's stats, or None when the split read was
-    * abandoned and the caller should read in one task. */
+    * cached rows with the split's stats, or None when a range was not
+    * stitched or the split read was abandoned, and the caller should read
+    * in one task. */
   def read(spark: SparkSession, path: String, len: Long, schema: StructType,
            options: Map[String, String], cuts: Seq[Long]): Option[(DataFrame, Ingest.Split)] = {
     val sc = spark.sparkContext
@@ -155,100 +141,26 @@ private[tabjolt] object SplitRead {
       val i = it.next()
       new RangeParse(ctx, segs(i), v => acc.add((i, v)))
     }
-    val first = GraftBridge.internalCreateDataFrame(spark, rdd, schema).cache()
+    val parsed = GraftBridge.internalCreateDataFrame(spark, rdd, schema).cache()
     def abandon(why: String): None.type = {
-      first.unpersist(blocking = true)
+      parsed.unpersist(blocking = true)
       System.err.println(s"[graft.Ingest] byte-range read of $path given up for one task: $why")
       None
     }
     try {
-      materialize(first)
+      materialize(parsed)
       val verdicts = acc.value.asScala.toMap
-      val missing = segs.indices.find(i => verdicts.get(i).forall(_.abandon.isDefined))
-      if (missing.isDefined) return abandon(missing.flatMap(verdicts.get).flatMap(_.abandon)
-        .getOrElse(s"no verdict for range ${missing.get}"))
-      var known = segs.indices.map(i => Known(segs(i), verdicts(i), i))
-      var (pieces, needs) = walk(known, len)
-      var recuts = 0
-      var rounds = 0
-      while (needs.nonEmpty) {
-        if (rounds == MaxRounds) return abandon(s"$MaxRounds re-cut rounds")
-        val fresh = sc.parallelize(needs, needs.size).map { seg =>
-          var verdict: Verdict = null
-          val p = new RangeParse(ctx, seg, verdict = _)
-          while (p.hasNext) p.next()
-          verdict
-        }.collect()
-        val why = fresh.flatMap(_.abandon).headOption
-        if (why.isDefined) return abandon(why.get)
-        known ++= needs.zip(fresh).map { case (s, v) => Known(s, v, -1) }
-        recuts += needs.size
-        rounds += 1
-        val next = walk(known, len)
-        pieces = next._1
-        needs = next._2
+      val why = segs.indices.flatMap(i => verdicts.get(i).fold(Option(s"no verdict for range $i"))(_.abandon))
+        .headOption.orElse(segs.indices.find(!verdicts(_).stitched).map(i => s"range $i not stitched"))
+      why match {
+        case Some(w) => abandon(w)
+        case None => Some((parsed, Ingest.Split(segs.size, 0)))
       }
-      val split = Ingest.Split(segs.size, recuts, 0)
-      if (recuts == 0 && pieces.forall(p => p.k.range >= 0 && p.from == 0 && p.until == p.k.v.rows))
-        return Some((first, split))
-      val base = first.queryExecution.toRdd
-      val parts: Seq[RDD[InternalRow]] = pieces.filter(p => p.until > p.from).map { p =>
-        val (from, until, seg, range) = (p.from, p.until, p.k.seg, p.k.range)
-        if (range >= 0) PartitionPruningRDD.create(base, _ == range).mapPartitions(_.slice(from, until))
-        else sc.parallelize(Seq(seg), 1).mapPartitions(_ => new RangeParse(ctx, seg, _ => ()).slice(from, until))
-      }
-      val rows = if (parts.isEmpty) sc.emptyRDD[InternalRow] else sc.union(parts)
-      val stitched = GraftBridge.internalCreateDataFrame(spark, rows, schema).cache()
-      try materialize(stitched)
-      catch { case e: Throwable => stitched.unpersist(blocking = true); throw e }
-      first.unpersist(blocking = true)
-      Some((stitched, split))
     } catch { case scala.util.control.NonFatal(e) => abandon(e.toString) }
   }
 
   /** Builds `df`'s cache in one stage, without converting a row. */
   private def materialize(df: DataFrame): Unit = df.queryExecution.toRdd.foreachPartition(_ => ())
-
-  /** A parse the planner knows of, and where its rows are: `range` is
-    * the partition of the first parse's cache, or -1 for a re-cut piece
-    * (parsed again when the rows are assembled). */
-  private final case class Known(seg: Seg, v: Verdict, range: Int)
-  /** Rows [from, until) of a known parse. */
-  private final case class Piece(k: Known, from: Int, until: Int)
-
-  /** Walks from offset 0 over record boundaries the known parses prove,
-    * returning the pieces that cover the file and the segments still to
-    * parse. Past a segment still to parse, the walk goes on as if it will
-    * be stitched, so independent re-cuts share one job. */
-  private def walk(known: Seq[Known], len: Long): (Vector[Piece], Vector[Seg]) = {
-    val pieces = Vector.newBuilder[Piece]
-    val needs = Vector.newBuilder[Seg]
-    val failedEnds = known.filterNot(_.v.stitched).map(_.seg.end).toSet
-    val candidates = known.flatMap(k => k.v.heads :+ k.seg.start).distinct
-      .filterNot(failedEnds).sorted.toVector
-    var p = 0L
-    while (p < len) {
-      val steps = known.flatMap { k =>
-        val from = if (k.seg.start == p) 0 else k.v.heads.indexOf(p) + 1
-        val (until, next) =
-          if (k.v.stitched) (k.v.rows, k.seg.end) else (k.v.rows - 1, k.v.lastStart)
-        if ((from > 0 || k.seg.start == p) && next > p) Some((Piece(k, from, until), next)) else None
-      }
-      if (steps.nonEmpty) {
-        val (piece, next) = steps.maxBy(_._2)
-        pieces += piece
-        p = next
-      } else {
-        val tries = known.count(_.seg.start == p)
-        val ahead = candidates.filter(_ > p)
-        val reach = (1L << math.min(tries, 62)) - 1
-        val end = if (reach < ahead.size) ahead(reach.toInt) else len
-        needs += Seg(p, end)
-        p = end
-      }
-    }
-    (pieces.result(), needs.result())
-  }
 
   /** What every range task needs: the file, its length, the Hadoop
     * configuration, the parse options and schema, and the sentinel's row. */
@@ -258,7 +170,7 @@ private[tabjolt] object SplitRead {
   /** The row the sentinel line parses to on its own. */
   private def sentinelRow(opts: CSVOptions, schema: StructType): InternalRow = {
     val in = new java.io.ByteArrayInputStream((Sentinel + "\n").getBytes(UTF_8))
-    new GraftCsv.Parse(in, opts, schema, startOfFile = true).rows.next().copy()
+    GraftCsv.parse(in, opts, schema, startOfFile = true).next().copy()
   }
 
   /** The rows of one [[Seg]], streamed: the sentinel row is dropped when
@@ -269,18 +181,13 @@ private[tabjolt] object SplitRead {
     private val last = seg.end == ctx.len
     private val types = ctx.schema.map(_.dataType)
     private var rows = 0
-    private val heads = Vector.newBuilder[Long]
-    private var prevEnd = seg.start // end of the last counted record
-    private var lastStart = seg.start
     private var abandon: Option[String] = None
-    private var done: Verdict = _
+    private var done = false
     private var bytes: RangeBytes = _
-    private var parse: GraftCsv.Parse = _
+    private var parse: Iterator[InternalRow] = _
     private var pending: InternalRow = _ // pulled, not yet returned
-    private var pendingEnd = -1L
     private var needPull = false
     private var stash: InternalRow = _ // a sentinel-like data row, returned before `pending`
-    private var stashEnd = -1L
 
     try {
       val path = new Path(ctx.path)
@@ -293,7 +200,7 @@ private[tabjolt] object SplitRead {
         in.seek(seg.start)
         bytes = new RangeBytes(in, seg.end - seg.start,
           if (last) Array.emptyByteArray else (Sentinel + "\n").getBytes(UTF_8))
-        parse = new GraftCsv.Parse(bytes, ctx.opts, ctx.schema, seg.start == 0)
+        parse = GraftCsv.parse(bytes, ctx.opts, ctx.schema, seg.start == 0)
         needPull = true
       }
     } catch { case scala.util.control.NonFatal(e) => abandon = Some(e.toString) }
@@ -302,12 +209,7 @@ private[tabjolt] object SplitRead {
       needPull = false
       pending = null
       if (abandon.isEmpty) try {
-        val line = parse.linesConsumed // the end of the record the next row comes from
-        if (parse.rows.hasNext) {
-          pending = parse.rows.next()
-          val end = bytes.offsetAfterLine(line)
-          pendingEnd = if (end < 0) -1L else seg.start + end
-        }
+        if (parse.hasNext) pending = parse.next()
         if (bytes.sawCR) { abandon = Some("'\\r' in the file"); pending = null }
       } catch { case scala.util.control.NonFatal(e) => abandon = Some(e.toString); pending = null }
     }
@@ -323,45 +225,34 @@ private[tabjolt] object SplitRead {
       true
     }
 
-    private def finish(stitched: Boolean): Unit = if (done == null) {
-      if (bytes != null && bytes.lost) abandon = abandon.orElse(Some("parser line count out of step"))
-      done = Verdict(rows, stitched, heads.result(), lastStart, abandon)
+    private def finish(stitched: Boolean): Unit = if (!done) {
+      done = true
       GraftCsv.countInput(rows, if (bytes == null) 0L else bytes.delivered)
-      report(done)
-    }
-
-    private def count(end: Long): Unit = {
-      if (rows < Heads && end >= 0) heads += end
-      lastStart = prevEnd
-      prevEnd = end
-      rows += 1
+      report(Verdict(stitched, abandon))
     }
 
     def hasNext: Boolean = {
       if (stash != null) return true
-      if (done != null) return false
+      if (done) return false
       if (needPull) pull()
       if (pending == null) { finish(stitched = last && abandon.isEmpty); return false }
       if (!last && isSentinel(pending)) {
         val held = pending.copy()
-        val heldEnd = pendingEnd
         pull()
         if (pending == null) { finish(stitched = abandon.isEmpty); return false }
         stash = held
-        stashEnd = heldEnd
       }
       true
     }
 
     def next(): InternalRow = {
       if (!hasNext) throw new NoSuchElementException("end of range")
+      rows += 1
       if (stash != null) {
         val r = stash
         stash = null
-        count(stashEnd)
         r
       } else {
-        count(pendingEnd)
         needPull = true
         pending
       }
@@ -369,18 +260,12 @@ private[tabjolt] object SplitRead {
   }
 
   /** Bytes [0, len) of `in` (positioned at the range start), then `tail`.
-    * Notes whether a `'\r'` passed and keeps the offsets of the range's
-    * newlines from the oldest line still asked about, so the parser's line
-    * count can be turned into byte offsets. */
+    * Notes whether a `'\r'` passed. */
   private final class RangeBytes(in: InputStream, len: Long, tail: Array[Byte]) extends InputStream {
     private var pos = 0L
     private var tailPos = 0
     def delivered: Long = pos
     var sawCR = false
-    /** A line asked about was already dropped, or asked out of order. */
-    var lost = false
-    private val nl = scala.collection.mutable.ArrayDeque.empty[Long] // lines base+1, base+2, ...
-    private var base = 0L // lines dropped so far
 
     override def read(): Int = {
       val one = new Array[Byte](1)
@@ -394,8 +279,7 @@ private[tabjolt] object SplitRead {
         if (got <= 0) { pos = len; return read(b, off, n) }
         var i = 0
         while (i < got) {
-          val c = b(off + i)
-          if (c == '\n') nl += pos + i else if (c == '\r') sawCR = true
+          if (b(off + i) == '\r') sawCR = true
           i += 1
         }
         pos += got
@@ -406,17 +290,6 @@ private[tabjolt] object SplitRead {
         tailPos += k
         k
       } else -1
-    }
-
-    /** The offset (from the range start) just past the `line`-th newline
-      * (1-based), or -1 when that newline is not in the range (none read
-      * yet, or it is the tail's). Lines before `line` are dropped. */
-    def offsetAfterLine(line: Long): Long = {
-      if (line <= 0 || line > base + nl.size) return -1L
-      if (line <= base) { lost = true; return -1L }
-      nl.dropInPlace((line - base - 1).toInt)
-      base = line - 1
-      nl.head + 1
     }
   }
 }

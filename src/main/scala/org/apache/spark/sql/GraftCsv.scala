@@ -23,19 +23,13 @@ object GraftCsv {
       conf.columnNameOfCorruptRecord)
   }
 
-  /** One stream's parse: `rows` is what the reader yields for a file
-    * holding these bytes (`schema` includes the corrupt-record column);
-    * `linesConsumed` is the parser's count of line separators read so
-    * far. `parseStream` converts a record and then parses the next one,
-    * so before `rows.hasNext` pulls a row, the count stands at the end of
-    * that row's record. */
-  final class Parse(in: InputStream, options: CSVOptions, schema: StructType,
-                    startOfFile: Boolean) {
-    private val data = StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord))
-    private val parser = new UnivocityParser(data, data, options)
-    val rows: Iterator[InternalRow] = UnivocityParser.parseStream(in, parser,
+  /** What the reader yields for a file holding the bytes of `in`
+    * (`schema` includes the corrupt-record column). */
+  def parse(in: InputStream, options: CSVOptions, schema: StructType,
+            startOfFile: Boolean): Iterator[InternalRow] = {
+    val data = StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord))
+    UnivocityParser.parseStream(in, new UnivocityParser(data, data, options),
       new CSVHeaderChecker(data, options, "CSV byte range", startOfFile), schema)
-    def linesConsumed: Long = parser.tokenizer.getContext.currentLine()
   }
 
   /** Counts a parse's rows and bytes in the running task's input

@@ -2,6 +2,7 @@ package graft.tabjolt
 
 import java.nio.file.Files
 import graft.SparkSpec
+import org.apache.spark.sql.types.StructType
 
 /** Rejected-row semantics of the COPY-equivalent loader
   * (SURVEY.md §1.4): malformed rows divert, good rows load, embedded
@@ -12,6 +13,14 @@ class IngestSpec extends SparkSpec {
     val f = Files.createTempFile("graft-ingest", suffix)
     Files.writeString(f, content)
     f.toString
+  }
+
+  /** `Pipeline.ingest` with `path` as the source of `schema`, empty files
+    * for the other three sources, and the rejected sink at `rejDir`. */
+  private def ingest(schema: StructType, path: String, rejDir: String): Pipeline.TabjoltTables = {
+    val Seq(sl, wc, ps, td) = Seq(Schemas.summaryLine, Schemas.winCounter,
+      Schemas.performanceSamples, Schemas.threadDetails).map(s => if (s == schema) path else tmpFile(""))
+    Pipeline.ingest(spark, PipelineConfig(sl, wc, ps, td, rejDir))
   }
 
   test("good rows load; over-arity rows divert to the rejected column") {
@@ -55,9 +64,9 @@ class IngestSpec extends SparkSpec {
         Seq("not", "a", "valid", "row", "too", "many", "fields", "here", "extra").mkString("\t") + "\n",
       ".tsv")
     val rejDir = Files.createTempDirectory("graft-rej").toString + "/rejected"
-    val result = Ingest.loadWithRejectedSink(spark, path, Schemas.winCounter, "\t", rejDir)
-    assert(result.good.count() >= 1)
-    result.cleanup()
+    val t = ingest(Schemas.winCounter, path, rejDir)
+    assert(t.winCounter.count() >= 1)
+    t.cleanup()
     val rejected = spark.read.text(rejDir).count()
     assert(rejected == 1)
   }
@@ -75,12 +84,12 @@ class IngestSpec extends SparkSpec {
     val torn = "999,0,1722333530044,true,L,200,\"unterminated quote swallows to EOF,T,,99,1,5,x"
     val path = tmpFile(Seq(good1, arity, good2, torn).mkString("", "\n", "\n"))
     val rejDir = Files.createTempDirectory("graft-rej-chaos").toString + "/rejected"
-    val r = Ingest.loadWithRejectedSink(spark, path, Schemas.performanceSamples, ",", rejDir)
-    assert(r.good.count() == 2)
-    assert(r.good.filter(org.apache.spark.sql.functions.col("response_message")
+    val t = ingest(Schemas.performanceSamples, path, rejDir)
+    assert(t.performanceSamples.count() == 2)
+    assert(t.performanceSamples.filter(org.apache.spark.sql.functions.col("response_message")
       .contains("Workbook: multi")).count() == 1)
-    val rejectedRaw = r.rejected.collect().map(_.getString(0)).toSet
-    r.cleanup()
+    val rejectedRaw = t.loads(2).rejected.collect().map(_.getString(0)).toSet
+    t.cleanup()
     assert(rejectedRaw.size == 2)
     assert(rejectedRaw.exists(_.startsWith("bad,row")))
     assert(rejectedRaw.exists(_.contains("unterminated quote")))

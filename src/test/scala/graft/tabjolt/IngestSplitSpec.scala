@@ -9,8 +9,8 @@ import org.scalacheck.rng.Seed
 
 /** The byte-range read equals the one-task read: rows in order, every
   * `_rejected` string, and the rejected sink's lines. Cuts are forced at
-  * every newline, so most of them fall inside records and the stitch
-  * check and the local re-cut carry the result. */
+  * every newline, so many of them fall inside records, and the stitch
+  * check must then give the file to the one-task read. */
 class IngestSplitSpec extends SparkSpec {
 
   private val schema = StructType((1 to 4).map(i => StructField(s"c$i", StringType)) :+
@@ -20,12 +20,13 @@ class IngestSplitSpec extends SparkSpec {
     Gen.listOfN(n, g).apply(Gen.Parameters.default, Seed(seed)).get
 
   /** A body of `d`-delimited records with every shape the parser must
-    * agree on across a cut. */
-  private def body(d: Char): Gen[String] = {
+    * agree on across a cut; with `oneLine`, only fields that close every
+    * quote on their own line, so that every newline ends a record. */
+  private def body(d: Char, oneLine: Boolean = false): Gen[String] = {
     val plain = Gen.oneOf("a", "bc", "12", "", " ", "é", "日本", "😀x", "x😀", "q\"r", "ab\"cd\"", "x\\")
-    val quoted = Gen.oneOf("\"multi\nline\"", "\"x\n\ny\"", "\"he said \"\"hi\"\"\"",
-      "\"back\\\"slash\"", s"\"has${d}delim\"", "\"é\n日本\"", "\"\"", "\"tail\"junk",
-      "\"open\\\"", "\"😀\n\"")
+    val closed = Seq("\"he said \"\"hi\"\"\"", "\"back\\\"slash\"", s"\"has${d}delim\"", "\"\"")
+    val quoted = Gen.oneOf(if (oneLine) closed else closed ++ Seq("\"multi\nline\"", "\"x\n\ny\"",
+      "\"é\n日本\"", "\"tail\"junk", "\"open\\\"", "\"😀\n\""))
     val field = Gen.frequency(5 -> plain, 2 -> quoted)
     def record(n: Int) = Gen.listOfN(n, field).map(_.mkString(d.toString))
     val line = Gen.frequency(
@@ -37,7 +38,8 @@ class IngestSplitSpec extends SparkSpec {
     for {
       n <- Gen.choose(10, 48)
       lines <- Gen.listOfN(n, line)
-      torn <- Gen.frequency(3 -> Gen.const(None), 1 -> Gen.choose(0, n).map(Some(_)))
+      torn <- if (oneLine) Gen.const(None)
+        else Gen.frequency(3 -> Gen.const(None), 1 -> Gen.choose(0, n).map(Some(_)))
       end <- Gen.oneOf("\n", "")
     } yield {
       // an unterminated quote runs from its line to EOF
@@ -80,15 +82,24 @@ class IngestSplitSpec extends SparkSpec {
     } finally { one.cleanup(); split.cleanup() }
   }
 
-  for ((name, d, seed) <- Seq(("CSV", ',', 41L), ("TSV", '\t', 43L)))
+  for ((name, d, seed) <- Seq(("CSV", ',', 41L), ("TSV", '\t', 43L))) {
     test(s"$name: cut at every newline, rows, rejects and sink equal the one-task read") {
       sample(body(d), 4, seed).foreach { content =>
         val f = write(content)
         val cuts = newlineCuts(f)
         val s = agree(f, d, cuts)
-        assert(s.fallbacks == 0 && s.ranges == cuts.size + 1, content)
+        assert(s == Ingest.Split(cuts.size + 1, 0) || s == Ingest.Split(1, 1), content)
       }
     }
+
+    test(s"$name: one-line records cut at every newline stay split") {
+      sample(body(d, oneLine = true), 2, seed).foreach { content =>
+        val f = write(content)
+        val cuts = newlineCuts(f)
+        assert(agree(f, d, cuts) == Ingest.Split(cuts.size + 1, 0), content)
+      }
+    }
+  }
 
   private lazy val jtl = JtlFixture.write(spark)
 
@@ -104,7 +115,7 @@ class IngestSplitSpec extends SparkSpec {
     }
     val r = Ingest.load(spark, f.toString, Schemas.performanceSamples, ",")
     try {
-      assert(r.split == Ingest.Split(graft.operators.Fanout.widthForBytes(spark, len), 0, 0))
+      assert(r.split == Ingest.Split(graft.operators.Fanout.widthForBytes(spark, len), 0))
       val one = Ingest.loadOneTask(spark, f.toString, Schemas.performanceSamples, ",")
       try assert(r.parsed.collect().toSeq == one.parsed.collect().toSeq)
       finally one.cleanup()
@@ -112,18 +123,17 @@ class IngestSplitSpec extends SparkSpec {
     } finally r.cleanup()
   }
 
-  test("a cut inside the multi-line row costs one small re-parse, not the split") {
+  test("a cut inside the multi-line row gives the file to the one-task read") {
     val (f, nominal) = jtl
     val bad = JtlFixture.firstNewlineAfter(f, nominal) // inside the row's quoted rm
-    val s = agree(f, ',', bad, Schemas.performanceSamples)
-    assert(s == Ingest.Split(nominal.size + 1, nominal.size, 0))
+    assert(agree(f, ',', bad, Schemas.performanceSamples) == Ingest.Split(1, 1))
   }
 
   test("a sentinel-equal data line just before a cut is kept") {
     val s = SplitRead.Sentinel
     val f = write(s"a,b,c,d\n$s\n$s\ne,f,g,h\n$s\n")
-    val st = agree(f, ',', newlineCuts(f))
-    assert(st.fallbacks == 0 && st.recuts == 0)
+    val cuts = newlineCuts(f)
+    assert(agree(f, ',', cuts) == Ingest.Split(cuts.size + 1, 0))
   }
 
   test("guarded bytes fall back to the one-task read: '\\r', a byte-order mark at a cut") {

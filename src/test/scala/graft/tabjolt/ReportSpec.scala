@@ -200,7 +200,7 @@ class ReportSpec extends SparkSpec {
       val t = Pipeline.ingest(spark,
         withSamples(jtl.toString, Files.createTempDirectory("rej").toString + "/rejected"))
       assert(t.loads(2).split ==
-        (if (fallback) Ingest.Split(1, 0, 1) else Ingest.Split(nominal.size + 1, 0, 0)))
+        (if (fallback) Ingest.Split(1, 1) else Ingest.Split(nominal.size + 1, 0)))
       assert(t.performanceSamples.count() == 12500 + 1) // the samples and the header row
       assert(persisted != before)
       t.cleanup()
