@@ -4,12 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every catalog query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * An optional comma-separated name list (Verify's filter) scopes the
+  * warmup and the timed passes to those entries, e.g.
+  * `sbt "runMain graft.Bench sk03_bloom_decon,t15_decontamination"`.
   *
   * A warmup pass at sf0.001 first exercises codegen + JIT so the timed
   * pass measures steady-state engine throughput rather than JVM
   * compilation of whichever query happens to run first. */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val ordered = SparkEntry.selected(args.headOption.toSeq.flatMap(_.split(',')))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.graftDefaults(SparkSession.builder())
@@ -27,7 +31,7 @@ object Bench {
 
     val warmupDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmupDir).isDirectory && warmupDir != sfDir) {
-      SparkEntry.queries.foreach { case (_, fn) =>
+      ordered.foreach { case (_, fn) =>
         try fn(spark, warmupDir).count() catch { case _: Throwable => }
         Lifecycle.release(spark)
       }
@@ -63,7 +67,6 @@ object Bench {
     // single transient container failure cannot masquerade as a broken
     // query (and a valid earlier sample is never poisoned by a later
     // failure: failed samples are simply dropped from the min).
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val passResults: Seq[Seq[(String, Double)]] = (1 to 3).map { _ =>
       ordered.map { case (name, fn) => name -> timeOnce(name, fn) }
     }

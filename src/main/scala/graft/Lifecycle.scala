@@ -46,8 +46,8 @@ object Lifecycle {
   def onDelete(hook: String => Unit): Unit = { deleteHooks.add(hook); () }
 
   /** Recursive delete of a scratch dir/file. The ONE implementation
-    * shared by checkpoint, fixture and index cleanup (Drain, StAmortize,
-    * IndexStore) so null handling and any future hardening
+    * shared by checkpoint, fixture and index cleanup (Drain, IndexStore,
+    * Similarity) so null handling and any future hardening
     * live in one place. Fires [[onDelete]] hooks once per call, after
     * the tree is gone. */
   def deleteRecursively(f: java.io.File): Unit = {
@@ -70,7 +70,8 @@ object Lifecycle {
     * removal, so a 127-query catalog pass stacks un-freed checkpoint
     * blocks from query N into query N+1's working set (round-13 churn
     * audit). Blocking costs <1 ms per block here and makes the release
-    * a real barrier.
+    * a real barrier. Local checkpoints are freed without Spark's
+    * truncated-lineage warning ([[org.apache.spark.GraftRdds]]).
     *
     * No explicit driver GC follows: an A/B at the 128-query catalog,
     * sf0.1 (PLANS.md round 13) measured GC per release as a ~25% total
@@ -86,7 +87,8 @@ object Lifecycle {
     }
     try spark.catalog.clearCache() catch { case NonFatal(_) => () }
     spark.sparkContext.getPersistentRDDs.valuesIterator.foreach { r =>
-      try r.unpersist(blocking = true) catch { case NonFatal(_) => () }
+      try org.apache.spark.GraftRdds.free(r, blocking = true)
+      catch { case NonFatal(_) => () }
     }
   }
 }

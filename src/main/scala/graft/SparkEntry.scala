@@ -26,6 +26,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     catalogs.map(q => q.name -> q.fn).toMap
 
+  /** The entries named in `names`, or every entry when `names` is empty,
+    * sorted by name: what Verify and Bench run. A name outside the
+    * catalog fails the run, which would otherwise just shrink by one
+    * entry with no error. */
+  def selected(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains).distinct
+    require(unknown.isEmpty, s"unknown catalog entries: ${unknown.mkString(", ")}")
+    all.toSeq.filter { case (n, _) => names.isEmpty || names.contains(n) }.sortBy(_._1)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

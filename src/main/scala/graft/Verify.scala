@@ -8,11 +8,12 @@ object Verify {
     // driver contract: exactly (sfDir, outDir). A third comma-separated
     // query-name list is a local dev filter (run one query against its
     // oracle without paying the whole catalog).
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+    val (sfDir, outDir, names) = args match {
+      case Array(s, o)    => (s, o, Nil)
+      case Array(s, o, f) => (s, o, f.split(',').toSeq)
       case _ => sys.error("usage: Verify <sfDir> <outDir> [names]")
     }
+    val entries = SparkEntry.selected(names)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.graftDefaults(SparkSession.builder())
       .master(s"local[$cpus]")
@@ -24,16 +25,14 @@ object Verify {
     // this correctness dump ran against (see graft.Vintage)
     System.err.println(Vintage.line(sfDir, spark.sparkContext.hadoopConfiguration))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        Lifecycle.release(spark)
+    entries.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      Lifecycle.release(spark)
+    }
     dumpOracleSql(sfDir, outDir)
     spark.stop()
   }
@@ -41,7 +40,7 @@ object Verify {
   /** Write `oracle_sql.json` for `sfDir` into `outDir`. Needs no Spark
     * session (late-bound oracles fingerprint the corpus from the file
     * listing), so tools can dump it standalone — see [[tools.OracleDump]]
-    * and tools/duck_bench.py's same-window pairing. */
+    * (`tools/Dumps.scala`) and tools/duck_bench.py's same-window pairing. */
   def dumpOracleSql(sfDir: String, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

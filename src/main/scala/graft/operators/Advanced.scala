@@ -1634,8 +1634,10 @@ object Advanced {
            |              ORDER BY logit DESC, doc_id) AS INTEGER) AS decile
            |FROM scored ORDER BY doc_id""".stripMargin))
 
-  /** Composed curation pipeline — the INTERACTION gate: the full ring
-    * CurationDemo narrates, as one hash-checked catalog entry. Chains
+  /** Composed curation pipeline — the INTERACTION gate: the chain a
+    * training-data deployment runs, as one hash-checked catalog entry
+    * (run it alone with `graft.Verify <sfDir> <outDir>
+    * c03_curation_pipeline`). Chains
     * t23 (near-dup canonical keep mask) → t15 (benchmark
     * decontamination, ≥5 shared shingles) → c02 (model quality cut,
     * top-7 deciles per source) → [[Corpus.packSequences]] over exactly

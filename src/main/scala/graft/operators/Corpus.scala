@@ -248,12 +248,12 @@ object Corpus {
       prevSum = s
       // the convergence probe above materialized; the previous round's
       // labels are unreachable from here on — free their blocks now
-      labelBlocks.foreach(_.unpersist(blocking = false))
+      labelBlocks.foreach(org.apache.spark.GraftRdds.free(_, blocking = false))
       labels = next
       labelBlocks = nextBlocks
     }
-    edgeBlocks.foreach(_.unpersist(blocking = false))
-    loopEdgeBlocks.foreach(_.unpersist(blocking = false))
+    edgeBlocks.foreach(org.apache.spark.GraftRdds.free(_, blocking = false))
+    loopEdgeBlocks.foreach(org.apache.spark.GraftRdds.free(_, blocking = false))
     // hand the result back on the CALLER's session: consumers compose
     // further plans (and join corpus-scale frames) under the caller's
     // conf, not the loop child's. The labels blocks are materialized

@@ -1,8 +1,8 @@
 package org.apache.spark
 
 /** Package-placed shim (the [[org.apache.spark.sql.GraftColumns]]
-  * convention): `SparkContext.listenerBus` is `private[spark]`, and the
-  * measurement mains need a DETERMINISTIC "all task-end events
+  * convention): `SparkContext.listenerBus` is `private[spark]`, and
+  * [[graft.tools.QueryProf]] needs a DETERMINISTIC "all task-end events
   * delivered" barrier before reading listener-fed accumulators — a
   * fixed sleep undercounts whenever the async bus is still draining a
   * large job's events (r19 ADVICE). Only Spark's

@@ -672,7 +672,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("curation pipeline composes: each stage strictly narrows, shards partition the output") {
-    // the CurationDemo chain as a library consumer uses it: canonical
+    // the c03 chain as a library consumer uses it: canonical
     // keep-mask -> decontaminate -> quality cut -> pack -> shard
     val kept = Corpus.t23.fn(spark, sf).filter("keep").select("doc_id")
     val contaminated = TextDedup.t15.fn(spark, sf).select("doc_id").distinct()
@@ -696,6 +696,15 @@ class OperatorsSpec extends SparkSpec {
     val prefixes = SparkEntry.catalogs.map(_.name.takeWhile(_ != '_'))
     val dups = prefixes.groupBy(identity).collect { case (p, ps) if ps.size > 1 => p }
     assert(dups.isEmpty, s"colliding catalog prefixes: $dups")
+  }
+
+  test("Verify/Bench entry filter: sorted subset, unknown names fail, none = all") {
+    val names = SparkEntry.selected(Seq("t06_jaccard_pairs", "c03_curation_pipeline")).map(_._1)
+    assert(names == Seq("c03_curation_pipeline", "t06_jaccard_pairs"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Seq("t06_jaccard_pairs", "t06_jacard_pairs")))
+    assert(e.getMessage.contains("t06_jacard_pairs") && !e.getMessage.contains("t06_jaccard_pairs"))
+    assert(SparkEntry.selected(Nil).map(_._1) == SparkEntry.catalogs.map(_.name).sorted)
   }
 
   test("q34 statuses partition both snapshots exactly (vs independent recount)") {
