@@ -17,6 +17,12 @@ import org.apache.spark.sql.functions._
   * always broadcastable) against the filtered current-day samples — at any
   * data volume the big side never shuffles for the join; AQE picks the
   * broadcast without a hint because the agg side's size is known small.
+  *
+  * A night ([[Pipeline.runDaily]]) runs Q1-Q3 as one [[dailyMetrics]]
+  * job, and computes [[perViewAverage]] once for Q8a and Q8b: it collects
+  * the aggregate and hands the rows to the `averages` forms of
+  * [[regressions]] and [[improvements]]. The `(samples, runDate)` forms
+  * build the aggregate into their own plan.
   */
 object Queries {
 
@@ -105,8 +111,8 @@ object Queries {
       .orderBy(col("elapsed_time").desc_nulls_first)
 
   /** Per-view historical average — the `aa` inline view of Q8a/Q8b
-    * (tabjolt_email.py:385). */
-  private def perViewAverage(samples: DataFrame): DataFrame =
+    * (tabjolt_email.py:385): columns `response` and `avg_elapsed_ms`. */
+  def perViewAverage(samples: DataFrame): DataFrame =
     samples
       .filter(isNumeric(col("elapsed_time_ms")) && siteViews(col("response_message")))
       .groupBy(col("response_message").as("response"))
@@ -122,12 +128,12 @@ object Queries {
       .select(col("elapsed_time_ms").try_cast("int").as("current_elapsed_ms"),
         col("response_message"))
 
-  /** The aa LEFT OUTER JOIN bb + CASE pct-diff core shared by Q8a/Q8b.
+  /** The aa LEFT OUTER JOIN bb + CASE pct-diff core shared by Q8a/Q8b,
+    * with `aa` the [[perViewAverage]] of `samples`.
     * NULL pct_diff (avg=0 guard, tabjolt_email.py:385) sorts FIRST under
     * DESC to match Vertica's default; Spark's `.desc` is NULLS LAST
     * (SURVEY.md §2.5 O2). */
-  private def pctDiff(samples: DataFrame, from: LocalDate): DataFrame = {
-    val aa = perViewAverage(samples)
+  private def pctDiff(samples: DataFrame, aa: DataFrame, from: LocalDate): DataFrame = {
     val bb = currentSamples(samples, from)
     aa.join(bb, aa("response") === bb("response_message"), "left_outer")
       .select(col("avg_elapsed_ms"), col("current_elapsed_ms"),
@@ -141,7 +147,11 @@ object Queries {
   /** Q8a — regressions: views where today's sample exceeds the historical
     * average (tabjolt_email.py:385). */
   def regressions(samples: DataFrame, runDate: LocalDate): DataFrame =
-    pctDiff(samples, runDate)
+    regressions(samples, perViewAverage(samples), runDate)
+
+  /** Q8a against `averages`, the [[perViewAverage]] of `samples`. */
+  def regressions(samples: DataFrame, averages: DataFrame, runDate: LocalDate): DataFrame =
+    pctDiff(samples, averages, runDate)
       .filter(col("avg_elapsed_ms") < col("current_elapsed_ms"))
       .orderBy(col("percentage_difference").desc_nulls_first)
 
@@ -149,7 +159,11 @@ object Queries {
     * 40% (the header text says 50% but the predicate is -40 — the
     * predicate is the behavior, SURVEY.md §3.4). */
   def improvements(samples: DataFrame, runDate: LocalDate): DataFrame =
-    pctDiff(samples, runDate.minusDays(3))
+    improvements(samples, perViewAverage(samples), runDate)
+
+  /** Q8b against `averages`, the [[perViewAverage]] of `samples`. */
+  def improvements(samples: DataFrame, averages: DataFrame, runDate: LocalDate): DataFrame =
+    pctDiff(samples, averages, runDate.minusDays(3))
       .filter(col("avg_elapsed_ms") > col("current_elapsed_ms"))
       .filter(col("percentage_difference") < -40.0)
       .orderBy(col("percentage_difference").desc_nulls_first)

@@ -207,4 +207,96 @@ class ReportSpec extends SparkSpec {
       assert(persisted == before, s"caches left after cleanup() (line end ${eol.length} bytes)")
     }
   }
+
+  /** Once the listener bus has delivered every job's end, the ids of the
+    * jobs still running. */
+  private def activeJobs: Seq[Int] = {
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext, 30000L)
+    spark.sparkContext.statusTracker.getActiveJobIds.toSeq
+  }
+
+  /** A [[JtlFixture]] file (every sample on the run date, split into byte
+    * ranges) with rows appended: 1500 more of today's samples, so that Q7
+    * passes the render cap, a non-numeric elapsed time today, a view whose
+    * every sample (so its average) is 0, and a fast sample from the day
+    * before, which only Q8b's 3-day window holds. Every elapsed time is
+    * distinct (the fixture's is `1000 + i % 9000`): Q7 and Q8 order equal
+    * times by the order their tasks end, so two runs could order tied
+    * rows differently. */
+  private def nightSamples(): String = {
+    import java.nio.file.{Files, StandardOpenOption}
+    val (jtl, _) = JtlFixture.write(spark, rows = 9000)
+    val today = 1722300000000L + 50000L // 2024-07-30 00:40 UTC, after the fixture's samples
+    val yesterday = 1722279600000L // 2024-07-29 19:00 UTC
+    def row(elapsed: String, ts: Long, view: String) =
+      s"$elapsed,00042,$ts,true,Interact Viz Test,200,Site: site0; Workbook: wb0; View: $view;," +
+        s"InteractVizThreadGroup 1-1,,00000001,1,5,x\n"
+    val extra = (0 until 1500).map(k => row((10000 + k).toString, today + k, f"view${k % 100}%03d")).mkString +
+      row("fast", today, "view007") +
+      row("00000", yesterday - 86400000L * 5, "zero") + row("00000", today, "zero") +
+      row("00100", yesterday, "view003")
+    Files.writeString(jtl, extra, StandardOpenOption.APPEND)
+    jtl.toString
+  }
+
+  test("the overlapped night renders the report of sequential collects, and leaves no job or cache") {
+    import java.nio.file.Files
+    val runDate = LocalDate.of(2024, 7, 30)
+    def summary = {
+      val f = Files.createTempFile("summary", ".txt")
+      Files.writeString(f, "Avg,100,2024-07-30\nAvg,200,2024-07-30\nMax,300,2024-07-30\n" +
+        "Max,301,2024-07-30\nMin,50,2024-07-30\nMin,49,2024-07-30\nAvg,90,2024-07-29\n")
+      f.toString
+    }
+    def rejected = Files.createTempDirectory("rej").toString + "/rejected"
+    val cfg = withSamples(nightSamples(), rejected).copy(summaryLinePath = summary)
+
+    val t = Pipeline.ingest(spark, cfg.copy(rejectedPath = rejected))
+    val expected = try {
+      def scalar(df: org.apache.spark.sql.DataFrame): String = df.collect().headOption
+        .map(r => Option(r.get(0)).map(_.toString).getOrElse("")).getOrElse("No results found")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.limit(10000).collect().toSeq
+      val metrics = Seq(
+        "Average time taken for tabjolt run (values are in ms):" ->
+          scalar(Queries.dailyMetric(t.summaryLine, runDate, "Avg")),
+        "Maximum time taken for tabjolt run (values are in ms):" ->
+          scalar(Queries.dailyMetric(t.summaryLine, runDate, "Max")),
+        "Minimum time taken for tabjolt run (values are in ms):" ->
+          scalar(Queries.dailyMetric(t.summaryLine, runDate, "Min")),
+        "Tabjolt test cases executed at " -> scalar(Queries.latestExecution(t.winCounter)),
+        "Average Historic time taken for tabjolt run (values are in ms):" ->
+          scalar(Queries.historicAvg(t.summaryLine)))
+      val q7 = rows(Queries.todaysSamples(t.performanceSamples, runDate))
+      val q8b = rows(Queries.improvements(t.performanceSamples, runDate))
+      // the inputs reach the cases they are there for
+      assert(metrics.take(3).map(_._2) == Seq("100", "300", "50"))
+      assert(q7.size == 10000 && q7.head.isNullAt(0))
+      assert(q8b.exists(r => r.getInt(1) == 100 && r.getString(2).contains("View: view003;")))
+      Report.html(metrics, q7, rows(Queries.regressions(t.performanceSamples, runDate)), q8b)
+    } finally t.cleanup()
+
+    val before = persisted
+    val sink = new CaptureEmailSink
+    val html = Pipeline.runDaily(spark, cfg, runDate, sink)
+    assert(html == expected)
+    assert(sink.sent.map(_.htmlBody) == Seq(expected))
+    assert(activeJobs.isEmpty)
+    assert(persisted == before)
+  }
+
+  test("on an unwritable rejected sink the night cancels its queries and leaves no job or cache") {
+    import java.nio.file.Files
+    val blocker = Files.createTempFile("graft-not-a-dir", ".txt")
+    val cfg = withSamples(nightSamples(), blocker.toString + "/rejected")
+    val before = persisted
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(new java.io.ByteArrayOutputStream, true))
+    val sink = new CaptureEmailSink
+    val html = try Pipeline.runDaily(spark, cfg, LocalDate.of(2024, 7, 30), sink)
+    finally System.setErr(stderr)
+    assert(sink.sent.size == 1)
+    assert(!html.contains("12661") && html.contains("No results found"))
+    assert(activeJobs.isEmpty)
+    assert(persisted == before)
+  }
 }
