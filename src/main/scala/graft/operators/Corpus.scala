@@ -78,8 +78,8 @@ object Corpus {
     * component, which is what the recursive-CTE oracles of every
     * consumer (t11/t23/t35/c03/c08) hash-check.
     *
-    * Superseded label checkpoints (and the edge frame, after
-    * convergence) are unpersisted as soon as nothing references them —
+    * Superseded label checkpoints and edge frames are unpersisted as
+    * soon as nothing references them —
     * block-store residency stays at two label generations + edges,
     * independent of round count. The FINAL labels checkpoint backs the
     * returned frame and is released by Lifecycle.release sweep. */
@@ -138,12 +138,18 @@ object Corpus {
     // filter is baked into the materialized rows; the inference the
     // filter used to pre-empt lands above the single edges scan and is
     // harmless there.
+    // The eager copy is the static path's only reader of edgesParent,
+    // so its blocks are freed as soon as the copy is in; the AQE path
+    // reads edgesParent every round and frees it after convergence.
     val (edges, loopEdgeBlocks) =
-      if (staticLoop) checkpointPinned(
-        LoopExec.bridge(loopSess, edgesParent)
-          .filter(col("src").isNotNull && col("dst").isNotNull)
-          .repartition(loopParts, col("src")))
-      else
+      if (staticLoop) {
+        val copy = checkpointPinned(
+          LoopExec.bridge(loopSess, edgesParent)
+            .filter(col("src").isNotNull && col("dst").isNotNull)
+            .repartition(loopParts, col("src")))
+        edgeBlocks.foreach(org.apache.spark.GraftRdds.free(_, blocking = false))
+        copy
+      } else
         (edgesParent.filter(col("src").isNotNull && col("dst").isNotNull),
           Seq.empty[org.apache.spark.rdd.RDD[_]])
     // Loop-state pin: lazy checkpoint, and on the static path RE-WRAP
@@ -252,7 +258,7 @@ object Corpus {
       labels = next
       labelBlocks = nextBlocks
     }
-    edgeBlocks.foreach(org.apache.spark.GraftRdds.free(_, blocking = false))
+    if (!staticLoop) edgeBlocks.foreach(org.apache.spark.GraftRdds.free(_, blocking = false))
     loopEdgeBlocks.foreach(org.apache.spark.GraftRdds.free(_, blocking = false))
     // hand the result back on the CALLER's session: consumers compose
     // further plans (and join corpus-scale frames) under the caller's

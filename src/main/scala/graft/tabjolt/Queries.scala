@@ -99,7 +99,9 @@ object Queries {
     * (tabjolt_email.py:383). Vertica DESC defaults to NULLS FIRST, and
     * Q7 guards only the timestamp cast, so a non-numeric
     * elapsed_time_ms (NULL after try_cast) sorts before the slowest
-    * real sample — matched here with desc_nulls_first. */
+    * real sample — matched here with desc_nulls_first. Equal elapsed
+    * times are ordered by the other columns ascending, so a capped
+    * collect does not depend on the order its tasks end in. */
   def todaysSamples(samples: DataFrame, runDate: LocalDate): DataFrame =
     samples
       .filter(isNumeric(col("timestamp_ms")) &&
@@ -108,7 +110,8 @@ object Queries {
       .select(col("elapsed_time_ms").try_cast("int").as("elapsed_time"),
         col("latency_time_ms"), col("success_indicator"),
         col("request_label"), col("response_message"))
-      .orderBy(col("elapsed_time").desc_nulls_first)
+      .orderBy(col("elapsed_time").desc_nulls_first, col("request_label"),
+        col("response_message"), col("latency_time_ms"), col("success_indicator"))
 
   /** Per-view historical average — the `aa` inline view of Q8a/Q8b
     * (tabjolt_email.py:385): columns `response` and `avg_elapsed_ms`. */
@@ -144,6 +147,10 @@ object Queries {
           .as("percentage_difference"))
   }
 
+  /** Equal percentage differences ordered by view, then current time,
+    * so a capped collect does not depend on the order its tasks end in. */
+  private val tieBreaks = Seq(col("response_message"), col("current_elapsed_ms"))
+
   /** Q8a — regressions: views where today's sample exceeds the historical
     * average (tabjolt_email.py:385). */
   def regressions(samples: DataFrame, runDate: LocalDate): DataFrame =
@@ -153,7 +160,7 @@ object Queries {
   def regressions(samples: DataFrame, averages: DataFrame, runDate: LocalDate): DataFrame =
     pctDiff(samples, averages, runDate)
       .filter(col("avg_elapsed_ms") < col("current_elapsed_ms"))
-      .orderBy(col("percentage_difference").desc_nulls_first)
+      .orderBy(col("percentage_difference").desc_nulls_first +: tieBreaks: _*)
 
   /** Q8b — improvements: 3-day current window, kept when the drop exceeds
     * 40% (the header text says 50% but the predicate is -40 — the
@@ -166,7 +173,7 @@ object Queries {
     pctDiff(samples, averages, runDate.minusDays(3))
       .filter(col("avg_elapsed_ms") > col("current_elapsed_ms"))
       .filter(col("percentage_difference") < -40.0)
-      .orderBy(col("percentage_difference").desc_nulls_first)
+      .orderBy(col("percentage_difference").desc_nulls_first +: tieBreaks: _*)
 
   /** Null-safe red-alert flag (>20% regression, README.md:10): the
     * reference's Python `pd > 20.0` would throw on None

@@ -219,10 +219,7 @@ class ReportSpec extends SparkSpec {
     * ranges) with rows appended: 1500 more of today's samples, so that Q7
     * passes the render cap, a non-numeric elapsed time today, a view whose
     * every sample (so its average) is 0, and a fast sample from the day
-    * before, which only Q8b's 3-day window holds. Every elapsed time is
-    * distinct (the fixture's is `1000 + i % 9000`): Q7 and Q8 order equal
-    * times by the order their tasks end, so two runs could order tied
-    * rows differently. */
+    * before, which only Q8b's 3-day window holds. */
   private def nightSamples(): String = {
     import java.nio.file.{Files, StandardOpenOption}
     val (jtl, _) = JtlFixture.write(spark, rows = 9000)
@@ -282,6 +279,35 @@ class ReportSpec extends SparkSpec {
     assert(sink.sent.map(_.htmlBody) == Seq(expected))
     assert(activeJobs.isEmpty)
     assert(persisted == before)
+  }
+
+  test("Q7, Q8a and Q8b order tied rows the same whatever the partitioning") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val runDate = LocalDate.of(2024, 7, 30)
+    val today = 1722300000000L // 2024-07-30 00:40 UTC
+    val old = today - 86400000L * 10
+    // every view has the same samples, so each query's sort key ties
+    // across views: Q7 on elapsed 100 and 2000, Q8a on +95.1%, Q8b on -90.2%
+    val rows = (0 until 40).flatMap { v =>
+      val view = s"Site: s; View: v$v;"
+      Seq(("1000", old, "a"), ("1000", old, "b"), ("100", today, "c"), ("2000", today, "d"),
+        ("2000", today, "e")).map { case (elapsed, ts, label) =>
+        Row(elapsed, s"${v % 3}", ts.toString, "true", s"$label${v % 2}", view)
+      }
+    }
+    val schema = StructType(Seq("elapsed_time_ms", "latency_time_ms", "timestamp_ms",
+      "success_indicator", "request_label", "response_message").map(StructField(_, StringType)))
+    def collects(rs: Seq[Row], parts: Int) = {
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rs, parts), schema)
+      Seq(Queries.todaysSamples(df, runDate), Queries.regressions(df, runDate),
+        Queries.improvements(df, runDate)).map(_.limit(10000).collect().toSeq)
+    }
+    val one = collects(rows, 1)
+    assert(one.map(_.size) == Seq(120, 80, 40))
+    val keys = Seq("elapsed_time", "percentage_difference", "percentage_difference")
+    assert(one.zip(keys).forall { case (q, k) => q.map(_.getAs[Any](k)).distinct.size < q.size },
+      "each query's sort key must tie")
+    assert(collects(rows.reverse, 4) == one)
   }
 
   test("on an unwritable rejected sink the night cancels its queries and leaves no job or cache") {
