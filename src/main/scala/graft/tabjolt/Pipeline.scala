@@ -133,14 +133,13 @@ object Fetch {
   * (rejected rows to the side sink), run the nine queries, render the
   * trend chart + HTML report, hand to the email sink.
   *
-  * The reference runs that work in order, one round trip each
-  * (tabjolt_email.py:361-387). Here every job of a night that does not
-  * need another one's result runs at the same time, on one [[Night]]
-  * pool: the four loads, the one rejected-row write, Q1–Q3 (one
-  * [[Queries.dailyMetrics]] job), Q4, Q5, Q6 with the chart render, Q7,
-  * and the per-view aggregate that Q8a and Q8b share. A query starts as
-  * soon as the table it reads is loaded, so the write and the queries
-  * overlap; Q8a and Q8b start once the aggregate is in.
+  * The reference runs that work as a straight-line script, one round
+  * trip each (tabjolt_email.py:361-387). Here a night is one dataflow of
+  * futures on a [[Night]], where each value waits only on what it reads:
+  * the four loads; on each table's load, the jobs that read it (Q1–Q3 as
+  * one [[Queries.dailyMetrics]] job, Q4, Q5, Q6 with the chart render,
+  * Q7 and the per-view aggregate); Q8a and Q8b on the collected
+  * aggregate; and the one rejected-row write on all four loads.
   *
   * The S3 download step (tabjolt_email.py:351-359) is [[Fetch]]: the
   * config's `fetch` pairs are staged first, and a failed fetch is logged
@@ -149,7 +148,7 @@ object Fetch {
   * S3 filesystem is on the classpath.
   */
 object Pipeline {
-  import java.util.concurrent.{Future, LinkedBlockingQueue}
+  import scala.concurrent.Future
   import scala.util.Try
   import scala.util.control.NonFatal
   import org.apache.spark.sql.Row
@@ -161,6 +160,11 @@ object Pipeline {
     def cleanup(): Unit = loads.foreach(_.cleanup())
   }
 
+  /** The Spark jobs of a night: the four loads, the write, Q1–Q3, Q4, Q5,
+    * Q6, Q7, the per-view aggregate, Q8a and Q8b. */
+  private val NightJobs = 13
+  private val MaxRenderRows = 10000
+
   /** The four sources, in the order of [[TabjoltTables]]. */
   private def sources(cfg: PipelineConfig) = Seq(
     (cfg.summaryLinePath, Schemas.summaryLine, ","),
@@ -171,81 +175,62 @@ object Pipeline {
   private def notLoaded(path: String, e: Throwable): Unit =
     System.err.println(s"[graft.Pipeline] source not loaded: $path ($e)")
 
-  /** An ingest in flight: the four loads, and the write of their rejected
-    * rows. */
-  private final case class Started(loads: Seq[Ingest.LoadResult], write: Future[Unit])
-
-  /** Starts the four loads on `night`. As each one ends, in the order
-    * they end, hands its index and good rows to `readers` on the calling
-    * thread, so that the jobs reading that table start beside the loads
-    * still running. Once all four are in, starts the one write of their
-    * rejected rows. */
-  private def start(spark: SparkSession, cfg: PipelineConfig, night: Night)(
-      readers: (Int, DataFrame) => Unit): Started = {
-    val srcs = sources(cfg)
-    val ended = new LinkedBlockingQueue[Int]
-    val jobs = srcs.zipWithIndex.map { case ((path, schema, delim), i) =>
-      night.submit {
+  /** The four loads, started on `night`. A source that fails to resolve
+    * (file deleted, fetch failed) logs and yields an EMPTY table rather
+    * than aborting the run — the reference skips missing files and
+    * reports on whatever loaded (tabjolt_email.py:371-375). */
+  private def load(spark: SparkSession, cfg: PipelineConfig)(
+      implicit night: Night): Seq[Future[Ingest.LoadResult]] =
+    sources(cfg).map { case (path, schema, delim) =>
+      Future {
         try Ingest.load(spark, path, schema, delim)
         catch {
           case NonFatal(e) =>
             notLoaded(path, e)
             Ingest.emptyLoad(spark, schema)
-        } finally ended.put(i)
+        }
       }
     }
-    val loads = new Array[Ingest.LoadResult](srcs.size)
-    try srcs.indices.foreach { _ =>
-      val i = ended.take()
-      loads(i) = night.await(jobs(i))
-      readers(i, loads(i).good)
-    } catch {
-      case e: Throwable =>
-        night.stop()
-        jobs.foreach(j => Try(j.get()).foreach(_.cleanup()))
-        throw e
-    }
-    val rejected = loads.map(_.rejected).reduce(_ union _)
-    Started(loads.toSeq, night.submit(rejected.write.mode("append").text(cfg.rejectedPath)))
-  }
 
-  /** The tables of `s` once its write has ended, and whether the write
-    * succeeded. A failed write stops `night` (see [[Night.stop]]), then
-    * releases every parse cache and substitutes an empty table for every
-    * source, as a failed load does. */
-  private def settle(spark: SparkSession, cfg: PipelineConfig, night: Night,
-                     s: Started): (TabjoltTables, Boolean) = {
-    val (kept, written) =
-      try {
-        night.await(s.write)
-        (s.loads, true)
-      } catch {
-        case NonFatal(e) =>
-          s.loads.foreach(_.cleanup())
-          (sources(cfg).map { case (path, schema, _) =>
-            notLoaded(path, e)
-            Ingest.emptyLoad(spark, schema)
-          }, false)
+  /** Appends the rejected rows of `loads` to the side sink in ONE write
+    * (one job and one commit, not four: an ordinary partitioned text
+    * write, with no collect) once all four are in, and awaits it. Returns
+    * the write's failure, if any; `night` is then stopped. */
+  private def writeFailure(cfg: PipelineConfig, loads: Seq[Future[Ingest.LoadResult]])(
+      implicit night: Night): Option[Throwable] =
+    Try(night.await(Future.sequence(loads).map { ls =>
+      ls.map(_.rejected).reduce(_ union _).write.mode("append").text(cfg.rejectedPath)
+    })).failed.toOption
+
+  /** The tables a failed write leaves: an empty one for every source, as
+    * a failed load yields. */
+  private def empty(spark: SparkSession, cfg: PipelineConfig, e: Throwable): Seq[Ingest.LoadResult] =
+    sources(cfg).map { case (path, schema, _) =>
+      notLoaded(path, e)
+      Ingest.emptyLoad(spark, schema)
+    }
+
+  /** Releases the parse cache of every load that has ended. */
+  private def release(loads: Seq[Future[Ingest.LoadResult]]): Unit =
+    loads.foreach(_.value.foreach(_.foreach(_.cleanup())))
+
+  /** Loads the four source tables at the same time and appends their
+    * rejected rows to the side sink; returns when the write has ended. A
+    * failed write releases every parse cache and substitutes an empty
+    * table for every source, as a failed load does. */
+  def ingest(spark: SparkSession, cfg: PipelineConfig): TabjoltTables = {
+    val results = Night.run(spark, jobs = 4) { implicit night =>
+      val loads = load(spark, cfg)
+      writeFailure(cfg, loads) match {
+        case None => loads.map(night.await)
+        case Some(e) =>
+          release(loads)
+          empty(spark, cfg, e)
       }
-    val Seq(sl, wc, ps, td) = kept
-    (TabjoltTables(sl.good, wc.good, ps.good, td.good, kept), written)
-  }
-
-  /** Loads the four source tables and appends their rejected rows to the
-    * side sink in ONE write (one job and one commit, not four): an
-    * ordinary partitioned text write, with no collect. The loads run at
-    * the same time, and the write starts once all four are in; this
-    * returns when the write has ended. A source
-    * that fails to resolve (file deleted, fetch failed) logs and yields an
-    * EMPTY table rather than aborting the run — the reference skips
-    * missing files and reports on whatever loaded
-    * (tabjolt_email.py:371-375). A failed sink write releases every parse
-    * cache and substitutes an empty table for every source, as a failed
-    * load does. */
-  def ingest(spark: SparkSession, cfg: PipelineConfig): TabjoltTables =
-    Night.run(spark, jobs = 4) { night =>
-      settle(spark, cfg, night, start(spark, cfg, night)((_, _) => ()))._1
     }
+    val Seq(sl, wc, ps, td) = results
+    TabjoltTables(sl.good, wc.good, ps.good, td.good, results)
+  }
 
   /** Runs the full daily pipeline against the sink the config names —
     * the reference's __main__ entry shape (config-driven SMTP,
@@ -258,208 +243,170 @@ object Pipeline {
   /** Runs the full report for `runDate` and sends it through `sink`.
     * Returns the rendered HTML for inspection.
     *
-    * The night's jobs overlap (see [[Pipeline]]): the queries on a table
-    * start as soon as its load ends, beside the rejected-row write, and
-    * each parse cache is released once its last reader has ended. If the
-    * write fails, the jobs already started are cancelled and awaited,
-    * every cache is released, and the report runs on the empty tables,
-    * as [[ingest]] returns them. On any other failure the night's jobs
-    * are cancelled and awaited before the caches are released and the
-    * failure is rethrown. */
+    * A table's queries start the moment its own load ends (see
+    * [[Pipeline]]). The rejected-row write is registered after the
+    * reads, and `Future.sequence` hands it to the pool only once the
+    * reads of the last load to end are queued. The pool runs its queue in
+    * order, so the write waits behind them and stays off the night's
+    * critical path, the per-view aggregate and then Q8a and Q8b. Two
+    * simpler shapes were slower when this one was sized on `perfbench`
+    * `daily_deep` (4 cores, `warm_p50_s` medians): a barrier that awaits
+    * all four loads before starting any read, 0.873 s against 0.808 s
+    * for per-table starts (seeds 21–30), and the write registered ahead
+    * of the reads, 0.814 s against 0.771 s (seeds 11–20).
+    *
+    * If the write fails, the night is stopped (its running jobs cancelled
+    * and awaited), every parse cache is released, and the same report
+    * runs once more, on a fresh night, on the empty tables that
+    * [[ingest]] returns then. On any other failure the night is stopped
+    * and the caches released before the failure is rethrown. The caches
+    * are released once, after the last await and before the send. */
   def runDaily(spark: SparkSession, cfg: PipelineConfig, runDate: LocalDate,
                sink: EmailSink): String = {
     Fetch.fetchAll(spark, cfg.fetch) // stage remote sources; failures logged, non-fatal
-    Night.run(spark, jobs = 4 + 1 + ReportJobs.Count) { night =>
-      val report = new ReportJobs(spark, night, runDate)
-      val s = start(spark, cfg, night)(report.start)
-      try {
-        report.startQ8()
-        val (t, written) = settle(spark, cfg, night, s)
-        if (!written) {
-          t.loads.zipWithIndex.foreach { case (l, i) => report.start(i, l.good) }
-          report.startQ8()
-        }
-        val (htmlBody, chartBytes, chartMime) = report.render(t.loads)
-        sink.send(MimeMessage(cfg.emailFrom, cfg.emailTo, cfg.emailSubject,
-          htmlBody, chartBytes, "graph_cid", chartMime))
-        htmlBody
-      } finally {
+    val rendered = Night.run(spark, NightJobs) { implicit night =>
+      val loads = load(spark, cfg)
+      val render = report(spark, runDate, loads)
+      try writeFailure(cfg, loads).toLeft(render())
+      finally {
         night.stop()
-        s.loads.foreach(_.cleanup()) // release ingest caches on every path
+        release(loads)
       }
     }
+    val (htmlBody, chartBytes, chartMime) = rendered match {
+      case Right(r) => r
+      case Left(e) =>
+        Night.run(spark, NightJobs) { implicit night =>
+          report(spark, runDate, empty(spark, cfg, e).map(Future.successful)).apply()
+        }
+    }
+    sink.send(MimeMessage(cfg.emailFrom, cfg.emailTo, cfg.emailSubject,
+      htmlBody, chartBytes, "graph_cid", chartMime))
+    htmlBody
   }
 
-  /** The report's jobs on a night, each started as soon as the table it
-    * reads is in: Q1–Q3 (one job), Q5, and Q6 with the chart render on
-    * `summary_line`; Q4 on `wincounter`; Q7 and the per-view aggregate
-    * on `performance_samples`. Q8a and Q8b start once the aggregate is
-    * in ([[startQ8]]). Every DataFrame is built on the calling thread;
-    * only its collect runs on the pool. */
-  private final class ReportJobs(spark: SparkSession, night: Night, runDate: LocalDate) {
-    import ReportJobs.MaxRenderRows
-    private val readers = Array.fill(4)(List.empty[Future[_]])
-    private var daily, historic, latest, today, averages, regressions, improvements: Future[Array[Row]] = _
-    private var chart: Future[(Array[Byte], String)] = _
-    private var samples, aggregate: DataFrame = _
-
-    private def job[A](table: Int)(body: => A): Future[A] = {
-      val f = night.submit(body)
-      readers(table) ::= f
-      f
+  /** Registers the report's reads on `loads` (in the order of
+    * [[TabjoltTables]]), each a `map` on the load of the table it reads:
+    * Q1–Q3 (one job), Q5, and Q6 with the chart render on
+    * `summary_line`; Q4 on `wincounter`; Q7 and the per-view aggregate on
+    * `performance_samples`. Q8a and Q8b are `map`s on the collected
+    * aggregate. Returns the render, which awaits them all on `night`: the
+    * report's HTML, chart bytes and chart MIME type. */
+  private def report(spark: SparkSession, runDate: LocalDate, loads: Seq[Future[Ingest.LoadResult]])(
+      implicit night: Night): () => (String, Array[Byte], String) = {
+    import scala.jdk.CollectionConverters._
+    def read[A](table: Int)(query: DataFrame => A): Future[A] = loads(table).map(l => query(l.good))
+    // Q7, Q8a and Q8b are capped: per-view aggregates are small by
+    // construction, but todaysSamples is one row PER REQUEST SAMPLE — on
+    // a heavy test day that is unbounded, so the render keeps the top
+    // MaxRenderRows (each query is sorted slowest-first).
+    def capped(df: DataFrame): Seq[Row] = df.limit(MaxRenderRows).collect().toSeq
+    val daily = read(0)(df => Queries.dailyMetrics(df, runDate, Seq("Avg", "Max", "Min")).collect().toSeq)
+    val historic = read(0)(df => Queries.historicAvg(df).collect().toSeq)
+    val chart = read(0)(df => chartOf(Report.trendPoints(Queries.trendSeries(df))))
+    val latest = read(1)(df => Queries.latestExecution(df).collect().toSeq)
+    val today = read(2)(df => capped(Queries.todaysSamples(df, runDate)))
+    val averages = read(2) { df =>
+      val aggregate = Queries.perViewAverage(df)
+      (df, spark.createDataFrame(aggregate.collect().toSeq.asJava, aggregate.schema))
     }
-
-    private def collect(table: Int, df: DataFrame): Future[Array[Row]] = job(table)(df.collect())
-
-    /** Starts the jobs that read `table` (its index in [[TabjoltTables]]). */
-    def start(table: Int, df: DataFrame): Unit = {
-      readers(table) = Nil
-      table match {
-        case 0 =>
-          daily = collect(0, Queries.dailyMetrics(df, runDate, Seq("Avg", "Max", "Min")))
-          historic = collect(0, Queries.historicAvg(df))
-          val trend = Queries.trendSeries(df)
-          chart = job(0)(ReportJobs.chart(Report.trendPoints(trend)))
-        case 1 =>
-          latest = collect(1, Queries.latestExecution(df))
-        case 2 =>
-          samples = df
-          // Collects are bounded: per-view aggregates are small by
-          // construction, but todaysSamples is one row PER REQUEST SAMPLE —
-          // on a heavy test day that is unbounded, so the render keeps the
-          // top MaxRenderRows slowest (the query is already sorted
-          // slowest-first).
-          today = collect(2, Queries.todaysSamples(df, runDate).limit(MaxRenderRows))
-          aggregate = Queries.perViewAverage(df)
-          averages = collect(2, aggregate)
-        case _ => // thread_details feeds only the rejected-row write
-      }
-    }
-
-    /** Starts Q8a and Q8b on the collected per-view aggregate. */
-    def startQ8(): Unit = {
-      import scala.jdk.CollectionConverters._
-      val aa = spark.createDataFrame(night.await(averages).toSeq.asJava, aggregate.schema)
-      regressions = collect(2, Queries.regressions(samples, aa, runDate).limit(MaxRenderRows))
-      improvements = collect(2, Queries.improvements(samples, aa, runDate).limit(MaxRenderRows))
-    }
-
-    /** The report's HTML and chart once every job has ended. Releases the
-      * parse cache of each of `loads` as soon as the jobs reading it have
-      * ended (the rejected-row write has ended before this is called). */
-    def render(loads: Seq[Ingest.LoadResult]): (String, Array[Byte], String) = {
-      loads.zip(readers).foreach { case (l, rs) => rs.foreach(night.await(_)); l.cleanup() }
+    val regressions = averages.map { case (df, aa) => capped(Queries.regressions(df, aa, runDate)) }
+    val improvements = averages.map { case (df, aa) => capped(Queries.improvements(df, aa, runDate)) }
+    () => {
       def scalar(rows: Seq[Row]): String =
         rows.headOption.map(r => Option(r.get(0)).map(_.toString).getOrElse("")).getOrElse("No results found")
-      val metricRows = night.await(daily).toSeq
+      val metricRows = night.await(daily)
       def metric(m: String): String = scalar(metricRows.filter(_.getString(1) == m))
       val metrics = Seq(
         "Average time taken for tabjolt run (values are in ms):" -> metric("Avg"),
         "Maximum time taken for tabjolt run (values are in ms):" -> metric("Max"),
         "Minimum time taken for tabjolt run (values are in ms):" -> metric("Min"),
-        "Tabjolt test cases executed at " -> scalar(night.await(latest).toSeq),
+        "Tabjolt test cases executed at " -> scalar(night.await(latest)),
         "Average Historic time taken for tabjolt run (values are in ms):" ->
-          scalar(night.await(historic).toSeq))
+          scalar(night.await(historic)))
       val (chartBytes, chartMime) = night.await(chart)
-      (Report.html(metrics, night.await(today).toSeq, night.await(regressions).toSeq,
-        night.await(improvements).toSeq), chartBytes, chartMime)
+      (Report.html(metrics, night.await(today), night.await(regressions), night.await(improvements)),
+        chartBytes, chartMime)
     }
   }
 
-  private object ReportJobs {
-    /** The jobs one [[ReportJobs]] starts: Q1–Q3, Q4, Q5, Q6, Q7, the
-      * per-view aggregate, Q8a and Q8b. */
-    val Count = 8
-    val MaxRenderRows = 10000
-
-    /** PNG to match the reference's matplotlib sink
-      * (tabjolt_email.py:329-333); SVG fallback only if the JVM raster
-      * path is unavailable. */
-    def chart(points: Seq[Report.TrendPoint]): (Array[Byte], String) =
-      try (Report.trendChartPng(points), "image/png")
-      catch {
-        case NonFatal(e) =>
-          System.err.println(s"[graft.Pipeline] PNG raster failed, falling back to SVG: $e")
-          (Report.trendChartSvg(points).getBytes("UTF-8"), "image/svg+xml")
-      }
-  }
+  /** PNG to match the reference's matplotlib sink
+    * (tabjolt_email.py:329-333); SVG fallback only if the JVM raster path
+    * is unavailable. */
+  private def chartOf(points: Seq[Report.TrendPoint]): (Array[Byte], String) =
+    try (Report.trendChartPng(points), "image/png")
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[graft.Pipeline] PNG raster failed, falling back to SVG: $e")
+        (Report.trendChartSvg(points).getBytes("UTF-8"), "image/svg+xml")
+    }
 }
 
-/** The pool a [[Pipeline]] call runs its Spark jobs on, owned by that
-  * call: `min(defaultParallelism, jobs)` daemon threads, where `jobs`
-  * is the number of independent jobs the call starts. The threads are
-  * started on the calling thread, so each inherits the caller's local
-  * properties (scheduler pool, job tags); every job runs under the
-  * caller's job group, or under a fresh one when the caller has none.
+/** The `ExecutionContext` a [[Pipeline]] call runs its night's futures
+  * on, owned by that call: a FIFO pool of `min(defaultParallelism, jobs)`
+  * daemon threads, where `jobs` is the number of Spark jobs the night
+  * runs. The threads are started on the calling thread, so each inherits
+  * the caller's local properties (job group, scheduler pool, job tags),
+  * and each adds a tag of its own night to them, so that [[stop]] cancels
+  * the night's jobs and no other job of the caller's group.
   *
-  * A job that fails is rethrown by [[await]] only after [[stop]] has
-  * cancelled the group and every started job has ended, so the caller
-  * may release the caches those jobs read as soon as the failure
-  * reaches it. Only the calling thread submits, awaits and stops. */
-private[tabjolt] final class Night private (spark: SparkSession, jobs: Int) {
-  import java.util.concurrent._
+  * A failed future is rethrown by [[await]] only after [[stop]] has
+  * cancelled the night's running jobs and every thread has ended, so the
+  * caller may release the caches those jobs read as soon as the failure
+  * reaches it. Only the calling thread awaits and stops. */
+private[tabjolt] final class Night private (spark: SparkSession, jobs: Int)
+    extends scala.concurrent.ExecutionContext {
+  import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+  import scala.concurrent.{Await, Future}
+  import scala.concurrent.duration.Duration
   private val sc = spark.sparkContext
-  private val group = Option(sc.getLocalProperty(Night.GroupKey))
-    .getOrElse(s"graft-tabjolt-night-${java.util.UUID.randomUUID}")
+  private val tag = s"graft-tabjolt-night-${java.util.UUID.randomUUID}"
   private val pool = {
     val width = math.max(1, math.min(sc.defaultParallelism, jobs))
     val p = new ThreadPoolExecutor(width, width, 0L, TimeUnit.MILLISECONDS,
-      new LinkedBlockingQueue[Runnable], (r: Runnable) => {
-        val t = new Thread(r, "graft-tabjolt-night")
+      new LinkedBlockingQueue[Runnable], (worker: Runnable) => {
+        val t = new Thread(() => { sc.addJobTag(tag); worker.run() }, "graft-tabjolt-night")
         t.setDaemon(true)
         t
       })
     p.prestartAllCoreThreads()
     p
   }
-  private val started = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
-  @volatile private var stopping = false
 
-  /** Runs `job` on the pool. Build its DataFrames before the call: only
-    * the collect or the write belongs in `job`. */
-  def submit[A](job: => A): Future[A] = {
-    val f = pool.submit(new Callable[A] {
-      def call(): A = {
-        if (stopping) throw new CancellationException("the night was stopped")
-        sc.setLocalProperty(Night.GroupKey, group)
-        job
-      }
-    })
-    started += f
-    f
-  }
+  def execute(job: Runnable): Unit = pool.execute(job)
+
+  /** Nothing to report: a night's futures are awaited, so a failed one
+    * reaches the caller through [[await]], and a callback refused after
+    * [[stop]] belongs to a night that has already ended. */
+  def reportFailure(cause: Throwable): Unit = ()
 
   /** `f`'s value. When `f` failed, [[stop]]s the night, then rethrows. */
   def await[A](f: Future[A]): A =
-    try f.get()
+    try Await.result(f, Duration.Inf)
     catch {
-      case e: ExecutionException =>
+      case scala.util.control.NonFatal(e) =>
         stop()
-        throw e.getCause
+        throw e
     }
 
-  /** Cancels the night's running Spark jobs, skips its queued ones, and
-    * waits until every job started so far has ended. The night can then
-    * start jobs again. */
+  /** Shuts the pool down. If jobs are still queued or running, drops the
+    * queued ones and cancels the night's running Spark jobs; then waits
+    * until every thread has ended. */
   def stop(): Unit = {
-    if (started.exists(!_.isDone)) {
-      stopping = true
-      sc.cancelJobGroup(group, "a job of the TabJolt night failed")
-      started.foreach(f => scala.util.Try(f.get()))
-      stopping = false
+    pool.shutdown()
+    if (pool.getActiveCount > 0 || !pool.getQueue.isEmpty) {
+      pool.getQueue.clear()
+      sc.cancelJobsWithTag(tag, "a job of the TabJolt night failed")
     }
-    started.clear()
+    pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
   }
 }
 
 private[tabjolt] object Night {
-  private val GroupKey = "spark.jobGroup.id"
-
-  /** Runs `body` on a new night; on every path, stops the night and shuts
-    * its pool down before returning. */
+  /** Runs `body` on a new night; on every path, stops the night before
+    * returning. */
   def run[A](spark: SparkSession, jobs: Int)(body: Night => A): A = {
     val night = new Night(spark, jobs)
-    try body(night)
-    finally try night.stop() finally night.pool.shutdown()
+    try body(night) finally night.stop()
   }
 }

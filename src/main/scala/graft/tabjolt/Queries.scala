@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * broadcast without a hint because the agg side's size is known small.
   *
   * A night ([[Pipeline.runDaily]]) runs Q1-Q3 as one [[dailyMetrics]]
-  * job, and computes [[perViewAverage]] once for Q8a and Q8b: it collects
-  * the aggregate and hands the rows to the `averages` forms of
+  * job and collects [[perViewAverage]] once; Q8a and Q8b then run on a
+  * DataFrame of the collected rows, through the `averages` forms of
   * [[regressions]] and [[improvements]]. The `(samples, runDate)` forms
   * build the aggregate into their own plan.
   */

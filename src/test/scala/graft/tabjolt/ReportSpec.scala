@@ -325,4 +325,17 @@ class ReportSpec extends SparkSpec {
     assert(activeJobs.isEmpty)
     assert(persisted == before)
   }
+
+  test("a failing email sink reaches the caller and leaves no job or cache") {
+    import java.nio.file.Files
+    val cfg = withSamples(nightSamples(), Files.createTempDirectory("rej").toString + "/rejected")
+    val before = persisted
+    val sink = new EmailSink {
+      def send(message: MimeMessage): Unit = throw new java.io.IOException("the SMTP server refused")
+    }
+    val e = intercept[java.io.IOException](Pipeline.runDaily(spark, cfg, LocalDate.of(2024, 7, 30), sink))
+    assert(e.getMessage == "the SMTP server refused")
+    assert(activeJobs.isEmpty)
+    assert(persisted == before)
+  }
 }
